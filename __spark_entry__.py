@@ -32,6 +32,7 @@ from cloudtrace_exporter_spark.operators import (
     text,
     udfs,
 )
+from cloudtrace_exporter_spark.session import artifact, invalidate
 from cloudtrace_exporter_spark.sources.tables import load_table
 
 # Auth-context constants for the normalize chain (the reference takes these
@@ -62,82 +63,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-# ~20 queries re-derive the full normalize chain over the events fixture;
-# memoize the (already-lazy) plan per session+sf_dir and persist it so the
-# driver's sequential query sweep computes it once instead of per-query.
-# Keyed by applicationId (stable, never reused within a JVM) rather than
-# id(spark): CPython can recycle a dead session's id() and hand a new
-# session a cached DataFrame bound to a stopped context. Single-slot per
-# app: switching sf_dir unpersists the previous entry so cached storage
-# never accumulates across a sweep over multiple SFs.
-_NORM_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _session_cache_get(cache: dict, spark: SparkSession, sf_dir: str, build):
-    """Per-(application, sf_dir) memo of a cached DataFrame (or tuple of
-    DataFrames — index artifacts), evicting (and unpersisting) same-app
-    entries for other sf_dirs on miss."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = cache.get(key)
-    if cached is None:
-        for old_key in [k for k in cache if k[0] == app_id]:
-            old = cache.pop(old_key)
-            for df in old if isinstance(old, tuple) else (old,):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        built = build()
-        cached = (
-            tuple(df.cache() for df in built) if isinstance(built, tuple) else built.cache()
-        )
-        cache[key] = cached
-    return cached
-
-
 def clear_session_caches(spark: SparkSession) -> int:
-    """Drop every session-frozen artifact memo (the ``*_CACHE`` module
-    dicts: index artifacts, frozen centroids/pools/stats) and every
-    CacheManager entry, so the NEXT invocation of any query pays its
-    full cold build from the parquet inputs.
-
-    Round 12 (r11 verdict order #1): bench.py's warm passes used to
-    populate these memos outside the timed window, so the timed
-    best-of-3 silently measured serve cost only. bench.py now times ONE
-    cold invocation per headline query (after calling this) and reports
-    it as ``queries_build`` next to the warm numbers. Never called on a
-    query path. Returns the number of memo entries dropped."""
-    n = 0
-    for name, val in list(globals().items()):
-        if name.endswith("_CACHE") and isinstance(val, dict):
-            for key in list(val):
-                entry_val = val.pop(key)
-                n += 1
-                stack = [entry_val]
-                while stack:
-                    item = stack.pop()
-                    if isinstance(item, DataFrame):
-                        try:
-                            item.unpersist()
-                        except Exception:
-                            pass
-                    elif isinstance(item, (tuple, list)):
-                        stack.extend(item)
-    try:
-        # cache_once-registered frames (tokenized containment corpus,
-        # global_row_number ranges, k-means inputs, ...) live in Spark's
-        # CacheManager, not in the module dicts
-        spark.catalog.clearCache()
-    except Exception:
-        pass
-    return n
+    """Drop every session artifact and CacheManager entry so the next
+    invocation of any query pays its full cold build (bench.py's
+    ``queries_build`` pass). Returns the number of artifacts dropped."""
+    return invalidate(spark)
 
 
 def _normalized_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events fixture → TRACE_SCHEMA → normalized EVENT_SCHEMA (Part A chain)."""
-    return _session_cache_get(
-        _NORM_CACHE, spark, sf_dir,
+    """events fixture → TRACE_SCHEMA → normalized EVENT_SCHEMA (Part A
+    chain). ~20 queries re-derive it, so it is a cached session artifact:
+    a sequential sweep over queries() computes it once, not per query."""
+    return artifact(
+        spark, "normalized_events", sf_dir,
         lambda: normalize.normalize_traces(
             normalize.events_as_traces(load_table(spark, sf_dir, "events")), **CTX
         ),
@@ -869,19 +807,15 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Build-once IVF index per (application, sf_dir): the k-means build is the
-# ingest-time step; steady-state queries (what bench measures) pay only the
-# centroid probe + cell-pruned scoring (see similarity.save_ivf_index for
-# the at-rest equivalent).
-_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B34 IVF-probed approximate top-k (rows-only; recall vs q_cosine_topk
-    asserted in tests)."""
+    asserted in tests). The IVF index is a build-once session artifact:
+    the k-means build is the ingest-time step; steady-state queries pay
+    only the centroid probe + cell-pruned scoring (see
+    similarity.save_ivf_index for the at-rest equivalent)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    index = _session_cache_get(
-        _IVF_INDEX_CACHE, spark, sf_dir,
+    index = artifact(
+        spark, "ivf_index", sf_dir,
         lambda: similarity.build_ivf_index(emb, n_centroids=16),
     )
     return similarity.ivf_topk(
@@ -905,9 +839,6 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dup_rate_by_source(load_table(spark, sf_dir, "documents"))
 
 
-_CLUSTERS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized CC assignment over the bounded slice: the iterative
     fixpoint EXECUTES at DataFrame-build time (localCheckpoint rounds),
@@ -915,8 +846,8 @@ def _dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~3-12 s convergence loop per sweep — same per-(app, sf) memo
     discipline as the LSH/PQ index artifacts (an assignment table IS a
     build-once artifact)."""
-    return _session_cache_get(
-        _CLUSTERS_CACHE, spark, sf_dir,
+    return artifact(
+        spark, "dedup_clusters", sf_dir,
         lambda: dedup.dedup_clusters(
             load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000),
             threshold=0.95,
@@ -1067,10 +998,7 @@ def q_near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawled corpora. Full oracle: the portable banded pipeline composed
     with a per-source aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index)
     involved = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -1275,30 +1203,24 @@ def _ewma_oracle_sql(*, alpha: float = 0.3, depth: int = 8, band: float = 2.0) -
     """
 
 
-_CONTRASTIVE_POOL_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _contrastive_pool(spark: SparkSession, sf_dir: str) -> list:
     """Session-frozen negative-sampling pool for q_contrastive_pairs —
     the pool_n smallest-md5(doc_id) ids, a deterministic function of the
     corpus (same freeze-once/serve-many lifecycle as _bm25_stats; the
     DuckDB oracle recomputes the identical pool from parquet)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _CONTRASTIVE_POOL_CACHE.get(key)
-    if got is None:
-        docs = load_table(spark, sf_dir, "documents")
-        got = [
+    return artifact(
+        spark, "contrastive_pool", sf_dir,
+        lambda: [
             r["cand"]
-            for r in docs.select(
+            for r in load_table(spark, sf_dir, "documents").select(
                 F.col("doc_id").alias("cand"),
                 F.md5(F.col("doc_id").cast("string").cast("binary")).alias("h"),
             )
             .orderBy("h", "cand")
             .limit(1024)
             .collect()
-        ]
-        _CONTRASTIVE_POOL_CACHE[key] = got
-    return got
+        ],
+    )
 
 
 def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1312,10 +1234,7 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bidir/pos/negs chain DuckDB replays integer-exactly. The exact
     Jaccard pair source survives as q_contrastive_pairs_exact."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index)
     return curate.contrastive_pairs(
         docs, pairs=pairs, pool=_contrastive_pool(spark, sf_dir)
@@ -1473,13 +1392,6 @@ def q_incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The banded LSH index is the build-once artifact of the MinHash pipeline
-# (dedup.minhash_banded_index); memoized per (application, sf_dir) so the
-# steady-state query — what bench measures — is the bucket join, not a
-# per-call signature rebuild.
-_MINHASH_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def q_incremental_near_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B33 steady-state near-dedup, ORACLE-BACKED: the cross-frame LSH
     bucket probe (new batch = doc_id ≥ 250 vs corpus index = doc_id <
@@ -1498,13 +1410,21 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_minhash_dedup_verified is the same pipeline over the portable hash
     family WITH a full DuckDB oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_INDEX_CACHE, spark, sf_dir, lambda: dedup.minhash_banded_index(docs)
-    )
+    index = artifact(spark, "minhash_index", sf_dir, lambda: dedup.minhash_banded_index(docs))
     return dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index)
 
 
-_MINHASH_PORTABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+def _minhash_portable_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The banded LSH index over the portable hash family — the
+    build-once artifact of the MinHash pipeline (dedup.minhash_banded_index),
+    shared by every portable-LSH query so the steady-state query is the
+    bucket join, not a per-call signature rebuild."""
+    return artifact(
+        spark, "minhash_portable_index", sf_dir,
+        lambda: dedup.minhash_banded_index(
+            load_table(spark, sf_dir, "documents"), portable=True
+        ),
+    )
 
 
 def q_minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1515,10 +1435,7 @@ def q_minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay bit-for-bit; see dedup.portable_hash_family). The green row
     certifies the LSH dedup algorithm itself, not just its row count."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     return dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index)
 
 
@@ -1529,10 +1446,7 @@ def q_minhash_jaccard_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold before a 100 TB dedup run. Exact Jaccard is computed only
     on the LSH-pruned candidate set (never O(n²))."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     return dedup.minhash_jaccard_diag(docs, index=index)
 
 
@@ -1800,58 +1714,40 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
-# The hyperplane-LSH index (hashed corpus + norm-carrying vectors) is the
-# build-once artifact of the ANN pipeline; memoized per (application,
-# sf_dir) so steady-state queries pay the probe, not a corpus re-hash.
-_LSH_INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _lsh_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    return _session_cache_get(
-        _LSH_INDEX_CACHE, spark, sf_dir,
+    """The hyperplane-LSH index (hashed corpus + norm-carrying vectors) —
+    the build-once artifact of the ANN pipeline, so steady-state queries
+    pay the probe, not a corpus re-hash."""
+    return artifact(
+        spark, "lsh_index", sf_dir,
         lambda: similarity.build_lsh_index(
             load_table(spark, sf_dir, "embeddings"), n_bits=2, n_tables=8
         ),
     )
 
 
-# Frozen BM25 corpus-stats snapshot per (application, sf_dir): the
-# percolator lifecycle freezes stats ONCE at index time and serves every
-# query batch against them — steady-state BM25 queries pay the narrow
-# scoring map, not a corpus re-aggregation. KB-sized plain tuple.
-_BM25_STATS_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _bm25_stats(spark: SparkSession, sf_dir: str) -> tuple:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BM25_STATS_CACHE.get(key)
-    if got is None:
-        terms = sorted({t for _, q in _BM25_QUERIES for t in q.split(" ")})
-        got = text.bm25_corpus_stats(load_table(spark, sf_dir, "documents"), terms)
-        _BM25_STATS_CACHE[key] = got
-    return got
+    """Frozen BM25 corpus-stats snapshot: the percolator lifecycle freezes
+    stats ONCE at index time and serves every query batch against them —
+    steady-state BM25 queries pay the narrow scoring map, not a corpus
+    re-aggregation. KB-sized plain tuple."""
+    terms = sorted({t for _, q in _BM25_QUERIES for t in q.split(" ")})
+    return artifact(
+        spark, "bm25_stats", sf_dir,
+        lambda: text.bm25_corpus_stats(load_table(spark, sf_dir, "documents"), terms),
+    )
 
 
-# PQ codebooks + encoded corpus per (application, sf_dir): train/encode
-# once (ingest-time), serve ADC probes per batch — the PQ lifecycle.
-_PQ_CACHE: dict[tuple[str, str], tuple] = {}
+def _pq_index(spark: SparkSession, sf_dir: str) -> tuple:
+    """PQ codebooks + encoded corpus: train/encode once (ingest-time),
+    serve ADC probes per batch — the PQ lifecycle."""
 
-
-def _pq_index(spark: SparkSession, sf_dir: str):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    got = _PQ_CACHE.get(key)
-    if got is None:
-        for old_key in [k for k in _PQ_CACHE if k[0] == app_id]:
-            try:
-                _PQ_CACHE.pop(old_key)[1].unpersist()
-            except Exception:
-                pass
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         books = similarity.pq_train(emb)
-        got = (books, similarity.pq_encode(emb, books).cache())
-        _PQ_CACHE[key] = got
-    return got
+        return books, similarity.pq_encode(emb, books)
+
+    return artifact(spark, "pq_index", sf_dir, build)
 
 
 def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1890,12 +1786,15 @@ def q_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B34 HEADLINE approximate top-k: multi-table hyperplane-LSH bucket
-    equi-join, FULL DuckDB oracle (the hyperplane family is
-    seed-deterministic and replayable — same oracle as its
-    q_lsh_topk_verified twin, which exists to carry the green driver row
-    from round 3); recall ≥0.9 vs q_cosine_topk asserted in
-    tests/test_llm_ops.py — measured 0.98 at n_bits=2/n_tables=8."""
+    """B34 HEADLINE approximate top-k, ORACLE-BACKED: multi-table
+    hyperplane-LSH bucket equi-join (no BNLJ anywhere in the plan),
+    verified bit-for-bit against a DuckDB oracle that replays the
+    identical hyperplane family (seeded literals — see _lsh_oracle_sql)
+    and the identical candidate/score/rank pipeline, so a green row
+    certifies the 100 TB ANN path itself. Recall ≥0.9 vs q_cosine_topk
+    asserted in tests/test_llm_ops.py — measured 0.98 at
+    n_bits=2/n_tables=8. ``q_lsh_topk_verified`` is an alias kept for
+    its registered key."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.lsh_topk(
         emb, emb.filter(F.col("vec_id") < 10), k=5, n_bits=2, n_tables=8,
@@ -1903,19 +1802,7 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_lsh_topk_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B34 scale-path top-k, ORACLE-BACKED: the exact same multi-table
-    hyperplane-LSH bucket equi-join as q_lsh_topk (no BNLJ anywhere in
-    the plan), verified bit-for-bit against a DuckDB oracle that replays
-    the identical hyperplane family (seeded literals — see
-    _lsh_oracle_sql) and the identical candidate/score/rank pipeline.
-    The green row for this key certifies the 100 TB ANN path itself, not
-    the fixture-only brute-force baseline."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, n_bits=2, n_tables=8,
-        index=_lsh_index(spark, sf_dir),
-    )
+q_lsh_topk_verified = q_lsh_topk
 
 
 def _ndcg_oracle_sql(*, k: int = 5) -> str:
@@ -3758,10 +3645,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     per sweep row; shares the cached portable index). Full oracle via
     the shared banded CTE."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     return dedup.dedup_threshold_sweep(docs, index=index)
 
 
@@ -3780,10 +3664,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the shared banded CTE; the mean is a sum of dyadic k/32
     estimates (exact in any accumulation order)."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     return dedup.source_overlap_matrix(docs, index=index)
 
 
@@ -4562,10 +4443,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt cancels by edge symmetry, leaving one division. Separates
     hub-to-hub template families from hub-and-spoke boilerplate."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index).select(
         "doc_a", "doc_b"
     )
@@ -4615,10 +4493,7 @@ def q_triangle_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     density signal on the banded candidate graph: which documents sit
     in mutually-duplicate clusters."""
     docs = load_table(spark, sf_dir, "documents")
-    index = _session_cache_get(
-        _MINHASH_PORTABLE_CACHE, spark, sf_dir,
-        lambda: dedup.minhash_banded_index(docs, portable=True),
-    )
+    index = _minhash_portable_index(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index).select(
         "doc_a", "doc_b"
     )
@@ -4838,32 +4713,22 @@ def q_dbscan_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDEDUP_CENTROIDS_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _semdedup_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Session-frozen k-means centroids for the shared SemDeDup fixture
     (n_centroids=8, lloyd_iters=2, scale=10**3) — the train-once/serve-
-    many index-artifact lifecycle of _bm25_stats/_IVF_INDEX_CACHE
+    many index-artifact lifecycle of _bm25_stats/q_ivf_topk
     applied to the k-means tier: the three semdedup postures score
     against ONE trained centroid set instead of re-running the Lloyd
     collects per query. Centroids are a deterministic function of the
     data, so results are identical to a fresh train (pinned by
     test_fast_paths + the unchanged DuckDB oracles, which replay the
     training from parquet)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SEMDEDUP_CENTROIDS_CACHE.get(key)
-    if got is None:
-        from cloudtrace_exporter_spark.operators.similarity import _scaled_kmeans
-
-        _, got = _scaled_kmeans(
-            _dbscan_corpus(spark, sf_dir),
-            n_centroids=8,
-            lloyd_iters=2,
-            scale=10**3,
-        )
-        _SEMDEDUP_CENTROIDS_CACHE[key] = got
-    return got
+    return artifact(
+        spark, "semdedup_centroids", sf_dir,
+        lambda: similarity._scaled_kmeans(
+            _dbscan_corpus(spark, sf_dir), n_centroids=8, lloyd_iters=2, scale=10**3
+        )[1],
+    )
 
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7847,15 +7712,13 @@ def oracle_sql() -> dict[str, str]:
             FROM peel WHERE round = 50
             GROUP BY a HAVING count(*) >= 2
         """,
-        # q_minhash_dedup / q_simhash_near_dup / q_lsh_topk: xxhash64-seeded
-        # signatures are engine-specific → rows-only (recall vs the exact
-        # ground-truth queries is asserted in tests/test_llm_ops.py).
-        # q_lsh_topk_verified: the hyperplane family is seed-deterministic,
-        # so DuckDB CAN replay it — the one ANN scale path with a full oracle.
+        # q_minhash_dedup / q_simhash_near_dup: xxhash64-seeded signatures
+        # are engine-specific → rows-only (recall vs the exact ground-truth
+        # queries is asserted in tests/test_llm_ops.py).
+        # q_lsh_topk (and its alias q_lsh_topk_verified): the hyperplane
+        # family is seed-deterministic, so DuckDB CAN replay it — the one
+        # ANN scale path with a full oracle.
         "q_lsh_topk_verified": _lsh_oracle_sql(),
-        # q_lsh_topk runs the IDENTICAL pipeline and index as its
-        # _verified twin (the twin exists so the driver-evidence rotation
-        # kept a green row while q_lsh_topk's was rows-only) — same oracle.
         "q_lsh_topk": _lsh_oracle_sql(),
         # q_minhash_dedup_verified: portable (md5 + linear-congruential)
         # hash family — the LSH dedup pipeline itself is integer-exact

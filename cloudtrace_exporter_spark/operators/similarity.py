@@ -373,6 +373,8 @@ def _ranked_cells_sql(col: str, cents: list[tuple[int, list[int]]]) -> str:
     invocation at k=8..16, dim=64 — round-12 plan-construction audit);
     bare integer literals parse to the same INT/BIGINT types F.lit
     produced, so the expression tree is semantically identical."""
+    if not isinstance(col, str):
+        raise TypeError(f"col must be a column name string, got {type(col).__name__}")
     m = "array(" + ", ".join(
         "array(" + ", ".join(str(int(x)) for x in c) + ")" for _, c in cents
     ) + ")"

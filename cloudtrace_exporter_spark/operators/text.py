@@ -339,8 +339,8 @@ def bm25_corpus_stats(
 
 
 def bm25_score_expr(
-    toks: Column | str,
-    dl: Column | str,
+    toks: Column,
+    dl: Column,
     query_terms: list[str],
     stats: tuple[list[tuple[str, int]], int, float],
     *,
@@ -352,35 +352,10 @@ def bm25_score_expr(
     token array (higher-order filter — no explode, no shuffle), idf and
     avgdl are literals. The zero-state building block of the streaming
     percolator (streaming.pipeline.stream_score_bm25) — and of any
-    serving path that scores documents one at a time.
-
-    Pass ``toks``/``dl`` as SQL fragments (column names/expressions) to
-    build the whole score as ONE parsed string — the Column-object path
-    costs ~6 py4j round trips per (query, term) and a |queries|-wide
-    scoring select re-pays it per invocation (round-12 plan-construction
-    audit). Values are bit-identical: the same Python floats reach the
-    plan via repr-round-tripped ``D`` literals, and the +/* association
-    order is unchanged.
-    """
+    serving path that scores documents one at a time."""
     df_map = dict(stats[0])
     n_docs, avgdl = stats[1], stats[2]
     import math
-
-    if isinstance(toks, str) and isinstance(dl, str):
-        parts = ["0.0D"]
-        for term in query_terms:
-            dfreq = df_map.get(term)
-            if dfreq is None:  # term absent from the corpus: contributes 0
-                continue
-            idf = math.log(1.0 + (n_docs - dfreq + 0.5) / (dfreq + 0.5))
-            t = "'" + term.replace("'", "''") + "'"
-            tf = f"CAST(size(filter({toks}, x -> x = {t})) AS DOUBLE)"
-            denom = f"({tf} + {k1!r}D * ({(1 - b)!r}D + {b!r}D * {dl} / {avgdl!r}D))"
-            parts.append(
-                f"(CASE WHEN {tf} > 0.0D THEN {idf!r}D * ({tf} * {(k1 + 1)!r}D"
-                f" / {denom}) ELSE 0.0D END)"
-            )
-        return F.expr(" + ".join(parts))
 
     def _eq(term: str):
         # arity-1 closure: a 2-parameter lambda (even with a default) is

@@ -16,6 +16,8 @@ runs with the same scale-aware defaults:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -127,32 +129,73 @@ def get_spark(app_name: str = "cloudtrace_exporter_spark", cpus: str | None = No
     return spark
 
 
-# round 12 (r11 verdict order #5): partition-count probes memoized per
-# (application, semantic plan hash). ``df.rdd.getNumPartitions()`` forces
-# physical planning + an RDD conversion through py4j (~0.1 s per call,
-# builder-measured) and the under-partitioned-input guards (_spread, the
-# bm25 fan-out) re-probe the SAME logical plan on every invocation. The
-# count is stable within a session (scan splits derive from the cached
-# file listing + conf; shuffle outputs from spark.sql.shuffle.partitions),
-# so the first probe's answer is replayed. Values are ints keyed by a
-# 32-bit semantic hash — a collision could only mis-steer the
-# spread-vs-not heuristic (plan shape, never results).
-_NUM_PARTITIONS_MEMO: dict[tuple[str, int], int] = {}
+# One session artifact store for every build-once/serve-many artifact:
+# index DataFrames (LSH/MinHash/IVF/PQ), frozen centroids, pools and BM25
+# stats, and partition counts. Keyed by (applicationId, name, sf_dir);
+# applicationId rather than id(spark), because CPython can recycle a dead
+# session's id() and hand a new session a DataFrame bound to a stopped
+# context.
+_ARTIFACTS: dict[tuple[str, Hashable, str | None], Any] = {}
+
+
+def artifact(spark: SparkSession, name: Hashable, sf_dir: str | None, build: Callable[[], Any]) -> Any:
+    """Build-on-miss memo of one session artifact. Every DataFrame in the
+    built value (a DataFrame, or a tuple holding some) is cached before it
+    is stored. A miss first evicts what can no longer be hit, unpersisting
+    evicted DataFrames:
+
+    - the same application's ``name`` under another ``sf_dir`` (a sweep
+      over several scale factors never accumulates cached storage);
+    - every other application's entry (a process has one live
+      SparkContext, so those entries are dead).
+    """
+    app_id = spark.sparkContext.applicationId
+    key = (app_id, name, sf_dir)
+    if key in _ARTIFACTS:
+        return _ARTIFACTS[key]
+    for old in [k for k in _ARTIFACTS if k[0] != app_id or k[1] == name]:
+        value = _ARTIFACTS.pop(old)
+        for item in value if isinstance(value, tuple) else (value,):
+            if isinstance(item, DataFrame):
+                try:  # a dead application's frames cannot be unpersisted
+                    item.unpersist()
+                except Exception:
+                    pass
+    built = build()
+    if isinstance(built, tuple):
+        built = tuple(v.cache() if isinstance(v, DataFrame) else v for v in built)
+    elif isinstance(built, DataFrame):
+        built = built.cache()
+    _ARTIFACTS[key] = built
+    return built
+
+
+def invalidate(spark: SparkSession) -> int:
+    """Drop every stored artifact and clear Spark's CacheManager, which
+    unpersists the artifacts' DataFrames and the ``cache_once`` frames, so
+    the next invocation of any query pays its full cold build. Returns the
+    number of entries dropped."""
+    n = len(_ARTIFACTS)
+    _ARTIFACTS.clear()
+    spark.catalog.clearCache()
+    return n
 
 
 def rdd_partitions(df: DataFrame) -> int:
-    """Partition count of ``df``'s physical RDD, memoized per
-    (applicationId, ``df.semanticHash()``). Falls back to the direct
-    probe if the hash is unavailable."""
+    """Partition count of ``df``'s physical RDD, stored as the artifact
+    ``("rdd_partitions", df.semanticHash())``. The direct probe forces
+    physical planning plus an RDD conversion through py4j (~0.1 s), and
+    the under-partitioned-input guards (_spread, the bm25 fan-out)
+    re-probe the same logical plan on every invocation. A 32-bit hash
+    collision could only mis-steer the spread-vs-not heuristic (plan
+    shape, never results). The count goes stale if a scanned directory
+    gains files; ``invalidate`` drops it. Falls back to the direct probe
+    if the hash is unavailable."""
     try:
-        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+        name = ("rdd_partitions", df.semanticHash())
     except Exception:
         return df.rdd.getNumPartitions()
-    got = _NUM_PARTITIONS_MEMO.get(key)
-    if got is None:
-        got = df.rdd.getNumPartitions()
-        _NUM_PARTITIONS_MEMO[key] = got
-    return got
+    return artifact(df.sparkSession, name, None, lambda: df.rdd.getNumPartitions())
 
 
 def cache_once(df: DataFrame) -> DataFrame:

@@ -829,7 +829,7 @@ def stream_semdedup(
     )
     s = (
         stream.select(F.col(id_col).alias("id"), qvec.alias("v"))
-        .withColumn("cell", _nearest_scaled(F.col("v"), cents))
+        .withColumn("cell", _nearest_scaled("v", cents))
         .withColumn("n2", self_dot)
     )
     c = corpus_index.select(
@@ -1275,7 +1275,7 @@ def stream_semantic_contamination(
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         corp = (
             batch_df.select(F.col(id_col).alias("id"), qvec.alias("v"))
-            .withColumn("cell", _nearest_scaled(F.col("v"), cents))
+            .withColumn("cell", _nearest_scaled("v", cents))
             .withColumn("n2", _self_dot_long())
         )
         verdicts = _contam_verdicts(corp, ev_cells, tau_num=tau_num, tau_den=tau_den)

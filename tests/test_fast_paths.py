@@ -301,13 +301,54 @@ def test_rdd_partitions_memo_matches_probe(spark):
 
 def test_clear_session_caches_drops_memos_and_cache(spark):
     import __spark_entry__ as entry
+    from cloudtrace_exporter_spark import session
 
-    df = spark.range(5).cache()
+    df = session.artifact(spark, "test-artifact", "sf-x", lambda: spark.range(5))
     df.count()
-    entry._NORM_CACHE[("app-x", "sf-x")] = df
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    assert not jcm.isEmpty()
     n = entry.clear_session_caches(spark)
     assert n >= 1
-    assert not entry._NORM_CACHE
+    assert not session._ARTIFACTS
     # the catalog-level cache is empty after the clear
-    jcm = spark._jsparkSession.sharedState().cacheManager()
     assert jcm.isEmpty()
+
+
+def test_invalidate_refreshes_partition_count_of_grown_dir(spark, tmp_path):
+    from cloudtrace_exporter_spark.session import invalidate, rdd_partitions
+
+    path = str(tmp_path / "grow")
+    # one scan split per file, so a new file shows as a new partition
+    prev = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
+    try:
+        spark.range(10).repartition(2).write.parquet(path)
+        before = rdd_partitions(spark.read.parquet(path))
+        assert before == 2
+        spark.range(10, 15).coalesce(1).write.mode("append").parquet(path)
+        # same logical plan, so the stored count is served until invalidate
+        assert rdd_partitions(spark.read.parquet(path)) == before
+        invalidate(spark)
+        grown = spark.read.parquet(path)
+        assert rdd_partitions(grown) == grown.rdd.getNumPartitions() == 3
+    finally:
+        spark.conf.set("spark.sql.files.openCostInBytes", prev)
+
+
+def test_artifact_miss_drops_other_application_entries(spark):
+    from cloudtrace_exporter_spark import session
+
+    session._ARTIFACTS[("app-dead", "dead-pool", "sf-x")] = [1, 2, 3]
+    assert session.artifact(spark, "pool", "sf-y", lambda: [4]) == [4]
+    assert ("app-dead", "dead-pool", "sf-x") not in session._ARTIFACTS
+    # hits serve the stored value without rebuilding
+    assert session.artifact(spark, "pool", "sf-y", lambda: [5]) == [4]
+    # a miss on the same name under another sf_dir evicts the old one
+    assert session.artifact(spark, "pool", "sf-z", lambda: [6]) == [6]
+    app = spark.sparkContext.applicationId
+    assert (app, "pool", "sf-y") not in session._ARTIFACTS
+
+
+def test_ranked_cells_rejects_column_objects():
+    with pytest.raises(TypeError, match="col"):
+        similarity._nearest_scaled(F.col("v"), [(0, [1, 2])])

@@ -1185,7 +1185,7 @@ def test_stream_semantic_contamination_screens_at_ingest(spark, tmp_path):
     qvec = F.transform(_as_double("embedding"), lambda x: F.round(x * 1000).cast("long"))
     corp = (
         union.select(F.col("vec_id").alias("id"), qvec.alias("v"))
-        .withColumn("cell", _nearest_scaled(F.col("v"), cents))
+        .withColumn("cell", _nearest_scaled("v", cents))
         .withColumn("n2", _self_dot_long())
     )
     batch = {
