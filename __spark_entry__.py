@@ -1382,61 +1382,49 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.similarity_triangles(dedup.jaccard_pairs(docs, threshold=0.95))
 
 
-def q_incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Steady-state near-dup curation: new batch (doc_id ≥ 250) vs corpus
-    (doc_id < 250) via cross-frame LSH bucket join (rows-only: hash-seeded;
-    planted-dup recall asserted in tests/test_llm_ops.py)."""
+def q_incremental_near_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B33 steady-state near-dedup, ORACLE-BACKED: the cross-frame LSH
+    bucket probe (new batch = doc_id ≥ 250 vs corpus index = doc_id <
+    250) — DuckDB replays signature, banding, cross-frame candidates,
+    agreement, and the final anti-join integer-exactly. Planted-dup
+    recall is asserted in tests/test_llm_ops.py.
+    ``q_incremental_near_dedup`` is an alias kept for its registered
+    key."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.incremental_near_dedup(
         docs.filter(F.col("doc_id") >= 250), docs.filter(F.col("doc_id") < 250)
     )
 
 
-def q_incremental_near_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B33 steady-state near-dedup, ORACLE-BACKED: the cross-frame LSH
-    bucket probe (new batch = doc_id ≥ 250 vs corpus index = doc_id <
-    250) over the portable hash family — DuckDB replays signature,
-    banding, cross-frame candidates, agreement, and the final anti-join
-    integer-exactly."""
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.incremental_near_dedup(
-        docs.filter(F.col("doc_id") >= 250), docs.filter(F.col("doc_id") < 250), portable=True
-    )
-
-
-def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B33 MinHash+LSH near-dup pairs (xxhash64 signatures — engine-specific,
-    rows-only check; recall vs q_ngram_jaccard asserted in tests).
-    q_minhash_dedup_verified is the same pipeline over the portable hash
-    family WITH a full DuckDB oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    index = artifact(spark, "minhash_index", sf_dir, lambda: dedup.minhash_banded_index(docs))
-    return dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index)
+q_incremental_near_dedup = q_incremental_near_dedup_verified
 
 
 def _minhash_portable_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The banded LSH index over the portable hash family — the
-    build-once artifact of the MinHash pipeline (dedup.minhash_banded_index),
-    shared by every portable-LSH query so the steady-state query is the
+    """The banded LSH index of the documents table — the build-once
+    artifact of the MinHash pipeline (dedup.minhash_banded_index),
+    shared by every LSH dedup query so the steady-state query is the
     bucket join, not a per-call signature rebuild."""
     return artifact(
         spark, "minhash_portable_index", sf_dir,
-        lambda: dedup.minhash_banded_index(
-            load_table(spark, sf_dir, "documents"), portable=True
-        ),
+        lambda: dedup.minhash_banded_index(load_table(spark, sf_dir, "documents")),
     )
 
 
 def q_minhash_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B33 MinHash+LSH, ORACLE-BACKED end to end: the identical
-    shingle→signature→band→bucket-join→agreement pipeline, but over the
-    engine-portable hash family (md5-prefix base + seeded linear-
-    congruential permutations mod 2³¹−1 — pure BIGINT math both engines
-    replay bit-for-bit; see dedup.portable_hash_family). The green row
-    certifies the LSH dedup algorithm itself, not just its row count."""
+    """B33 MinHash+LSH near-dup pairs, ORACLE-BACKED end to end:
+    shingle→signature→band→bucket-join→agreement over the md5-prefix
+    base + seeded linear-congruential permutations mod 2³¹−1 — pure
+    BIGINT math both engines replay bit-for-bit (see
+    dedup.portable_hash_family). The green row certifies the LSH dedup
+    algorithm itself, not just its row count; recall vs planted near-dups
+    is asserted in tests/test_llm_ops.py. ``q_minhash_dedup`` is an
+    alias kept for its registered key (and bench.py's r-series)."""
     docs = load_table(spark, sf_dir, "documents")
     index = _minhash_portable_index(spark, sf_dir)
     return dedup.minhash_lsh_pairs(docs, threshold=0.5, index=index)
+
+
+q_minhash_dedup = q_minhash_dedup_verified
 
 
 def q_minhash_jaccard_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5195,7 +5183,6 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_dedup_incremental(
         docs.filter(F.col("doc_id") >= 250),
         docs.filter(F.col("doc_id") < 250),
-        portable=True,
     )
 
 
@@ -7712,20 +7699,23 @@ def oracle_sql() -> dict[str, str]:
             FROM peel WHERE round = 50
             GROUP BY a HAVING count(*) >= 2
         """,
-        # q_minhash_dedup / q_simhash_near_dup: xxhash64-seeded signatures
-        # are engine-specific → rows-only (recall vs the exact ground-truth
+        # q_simhash_near_dup: xxhash64-seeded signatures are
+        # engine-specific → rows-only (recall vs the exact ground-truth
         # queries is asserted in tests/test_llm_ops.py).
         # q_lsh_topk (and its alias q_lsh_topk_verified): the hyperplane
         # family is seed-deterministic, so DuckDB CAN replay it — the one
         # ANN scale path with a full oracle.
         "q_lsh_topk_verified": _lsh_oracle_sql(),
         "q_lsh_topk": _lsh_oracle_sql(),
-        # q_minhash_dedup_verified: portable (md5 + linear-congruential)
-        # hash family — the LSH dedup pipeline itself is integer-exact
-        # replayable in DuckDB.
+        # q_minhash_dedup_verified (and its alias q_minhash_dedup): the
+        # md5 + linear-congruential MinHash family — the LSH dedup
+        # pipeline itself is integer-exact replayable in DuckDB; likewise
+        # q_incremental_near_dedup_verified and its alias.
         "q_minhash_dedup_verified": _minhash_portable_oracle_sql(),
+        "q_minhash_dedup": _minhash_portable_oracle_sql(),
         "q_minhash_jaccard_diag": _minhash_diag_oracle_sql(),
         "q_incremental_near_dedup_verified": _incremental_minhash_oracle_sql(),
+        "q_incremental_near_dedup": _incremental_minhash_oracle_sql(),
         "q_winnow_dedup_verified": _winnow_portable_oracle_sql(),
         "q_simhash_near_dup_verified": _simhash_portable_oracle_sql(),
         "q_dsir_importance": f"""

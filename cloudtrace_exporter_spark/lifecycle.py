@@ -181,9 +181,7 @@ def run_lifecycle(
     _stage(spark, m, "graph", p_graph, _graph)
 
     def _dedup() -> DataFrame:
-        pairs = dedup.minhash_lsh_pairs(
-            docs, threshold=lsh_threshold, portable=True
-        ).select("doc_a", "doc_b")
+        pairs = dedup.minhash_lsh_pairs(docs, threshold=lsh_threshold).select("doc_a", "doc_b")
         assign = dedup.dedup_clusters(docs, pairs=pairs)
         survivors = assign.filter(F.col("doc_id") == F.col("component")).select("doc_id")
         return docs.join(survivors, "doc_id")

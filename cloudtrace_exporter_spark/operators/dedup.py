@@ -33,6 +33,7 @@ import random
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from cloudtrace_exporter_spark.operators.text import tokens
 from cloudtrace_exporter_spark.session import cache_once
@@ -67,9 +68,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(parallelism)
 
 
-# deterministic seeds for the minhash permutation family
-_MINHASH_SEEDS = [1000003 * (i + 1) + 17 for i in range(32)]
-
 #: modulus of the engine-portable permutation family (2³¹−1, Mersenne)
 PORTABLE_P = 2147483647
 
@@ -77,7 +75,7 @@ PORTABLE_P = 2147483647
 def portable_hash_family(n_hashes: int = 32, seed: int = 20240801) -> list[tuple[int, int]]:
     """(a_i, b_i) pairs for the linear-congruential MinHash permutation
     family h_i(x) = (a_i·x + b_i) mod 2³¹−1 — classical universal
-    hashing, chosen for the ``portable=True`` paths because BOTH engines
+    hashing, the one MinHash family, chosen because BOTH engines
     replay it bit-for-bit (pure BIGINT arithmetic; x, a < 2³¹ keeps
     a·x < 2⁶² with no 64-bit overflow, which DuckDB would reject and
     Java would silently wrap). Seeded, so the DuckDB oracle embeds the
@@ -241,19 +239,19 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n_hashes: int = 32,
     shingle: int = 3,
-    *,
-    portable: bool = False,
 ) -> DataFrame:
-    """MinHash signature per document: for each of ``n_hashes`` seeded
-    xxhash64 'permutations', the min hash over the shingle set.
+    """MinHash signature per document: for each of the ``n_hashes``
+    linear-congruential permutations of ``portable_hash_family``, the
+    min hash over the shingle set.
 
-    Two-level hashing: each string shingle is hashed to a long ONCE, and
-    the permutation family re-hashes that 8-byte long with the slot seed
-    — n_shingles string-hashes + n_shingles·n_hashes long-hashes instead
-    of n_shingles·n_hashes string-hashes (~4× faster measured at sf0.1;
-    variable-length string hashing dominates long hashing). The base
-    hashes ride through an ``explode``-free nested transform, all
-    JVM-side (xxhash64 + transform + array_min); one narrow map.
+    Two-level hashing: each string shingle is hashed ONCE to a BIGINT
+    base (md5 hex prefix mod 2³¹−1 — identical in DuckDB:
+    CAST('0x'||substr(md5(s),1,15) AS BIGINT)), and each permutation
+    re-maps that base with pure BIGINT arithmetic — n_shingles string
+    hashes + n_shingles·n_hashes multiply-adds instead of
+    n_shingles·n_hashes string hashes. The base hashes ride through an
+    ``explode``-free nested transform, all JVM-side; one narrow map.
+    The whole signature replays bit-for-bit in DuckDB (full oracle).
     """
     df = _spread(df)
     # materialize tokens, then shingle hashes, as columns: each step's
@@ -261,40 +259,24 @@ def minhash_signatures(
     # re-evaluates per element (split+filter per shingle, the whole
     # shingle chain per signature slot)
     toked = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__t"))
-    if portable:
-        # engine-portable two-level hashing: md5-prefix → BIGINT base
-        # (identical in DuckDB: CAST('0x'||substr(md5(s),1,15) AS BIGINT)),
-        # then the linear-congruential family — the full-oracle variant
-        base = toked.select(
-            "id",
-            F.transform(
-                _shingles(F.col("__t"), shingle),
-                lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 15), 16, 10).cast("long")
-                % PORTABLE_P,
-            ).alias("__h"),
-        )
-
-        def min_ab(a: int, b: int) -> F.Column:
-            return F.array_min(
-                F.transform(F.col("__h"), lambda h: (h * F.lit(a) + F.lit(b)) % PORTABLE_P)
-            )
-
-        sig = F.array(*[min_ab(a, b) for a, b in portable_hash_family(n_hashes)])
-        return base.select("id", sig.alias("signature"))
     base = toked.select(
         "id",
-        F.transform(_shingles(F.col("__t"), shingle), lambda s: F.xxhash64(s)).alias("__h"),
+        F.transform(
+            _shingles(F.col("__t"), shingle),
+            lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 15), 16, 10).cast("long")
+            % PORTABLE_P,
+        ).alias("__h"),
     )
 
-    def min_for(seed: int) -> F.Column:
-        # arity-1 lambda via closure: a 2-arg lambda (even with a default)
-        # is read by transform() as (element, index), silently replacing
-        # the seed with the array position — every signature slot then
-        # collapses to one index-salted min and near-dup agreement drops
-        # to ~0 for any non-append edit
-        return F.array_min(F.transform(F.col("__h"), lambda h: F.xxhash64(h, F.lit(seed))))
+    def min_ab(a: int, b: int) -> F.Column:
+        # arity-1 lambda via closure: a 2-arg lambda is read by
+        # transform() as (element, index), silently replacing the
+        # permutation constants with the array position
+        return F.array_min(
+            F.transform(F.col("__h"), lambda h: (h * F.lit(a) + F.lit(b)) % PORTABLE_P)
+        )
 
-    sig = F.array(*[min_for(seed) for seed in _MINHASH_SEEDS[:n_hashes]])
+    sig = F.array(*[min_ab(a, b) for a, b in portable_hash_family(n_hashes)])
     return base.select("id", sig.alias("signature"))
 
 
@@ -306,10 +288,9 @@ def minhash_banded_index(
     n_hashes: int = 32,
     bands: int = 8,
     shingle: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """The LSH index table: one row per (doc, band) with the band-bucket
-    hash and the full signature — ``(id, signature, band, bucket)``.
+    key and the full signature — ``(id, signature, band, bucket)``.
 
     This is the build-once artifact of every LSH dedup pipeline (the
     analog of ivf's ``build_ivf_index``): build it, ``.cache()`` or
@@ -318,38 +299,31 @@ def minhash_banded_index(
     callers who don't materialize it pay the CollapseProject recompute
     trap (~30×, measured) — minhash_lsh_pairs caches it when building
     internally.
+
+    ``bucket`` is the first 8 md5 hex chars of the band's comma-joined
+    slots (a string): Java's Long.toString and DuckDB's
+    CAST(BIGINT AS VARCHAR) render the non-negative slot values
+    identically, so both engines hash the same bytes.
     """
     r = n_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle, portable=portable)
+    sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle)
+
+    def bucket(b: int) -> F.Column:
+        joined = F.concat_ws(",", *[F.col("signature")[b * r + i] for i in range(r)])
+        return F.substring(F.md5(joined.cast("binary")), 1, 8)
+
     return sigs.select(
         "id",
         "signature",
         F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_bucket(
-                            [F.col("signature")[b * r + i] for i in range(r)], portable
-                        ).alias("bucket"),
-                    )
+                    F.struct(F.lit(b).alias("band"), bucket(b).alias("bucket"))
                     for b in range(bands)
                 ]
             )
         ).alias("bb"),
     ).select("id", "signature", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
-def _band_bucket(slots: list, portable: bool) -> F.Column:
-    """Band-slot bucket key: xxhash64 (fast JVM path) or an md5 hex
-    prefix over the same comma-joined slots (portable path — Java's
-    Long.toString and DuckDB's CAST(BIGINT AS VARCHAR) render the
-    non-negative slot values identically, so both engines hash the same
-    bytes)."""
-    joined = F.concat_ws(",", *slots)
-    if portable:
-        return F.substring(F.md5(joined.cast("binary")), 1, 8)
-    return F.xxhash64(joined)
 
 
 def minhash_lsh_pairs(
@@ -362,7 +336,6 @@ def minhash_lsh_pairs(
     shingle: int = 3,
     threshold: float = 0.5,
     index: DataFrame | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs, verified by signature overlap.
 
@@ -388,7 +361,7 @@ def minhash_lsh_pairs(
     else:
         banded = minhash_banded_index(
             df, text_col=text_col, id_col=id_col, n_hashes=n_hashes, bands=bands,
-            shingle=shingle, portable=portable,
+            shingle=shingle,
         ).cache()
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -424,8 +397,8 @@ def dedup_threshold_sweep(
     the one-pass sweep an operator reads before committing a 100 TB dedup
     threshold (too low deletes paraphrases; too high leaves templates).
 
-    Built on the PORTABLE MinHash-LSH candidate pairs (one index build,
-    shared via ``index`` with the other portable keys), so the whole
+    Built on the MinHash-LSH candidate pairs (one index build, shared
+    via ``index`` with the other LSH keys), so the whole
     sweep — estimates included — replays in DuckDB. The pair frame is
     computed ONCE at min(thresholds) and re-thresholded per sweep row
     (explode over the literal threshold list): |thresholds| never
@@ -437,7 +410,7 @@ def dedup_threshold_sweep(
     """
     pairs = minhash_lsh_pairs(
         df, threshold=min(thresholds), text_col=text_col, id_col=id_col,
-        index=index, portable=True,  # callers pass the PORTABLE index
+        index=index,
     ).localCheckpoint()  # tiny; feeds |thresholds| re-filters + a dedup
     toks = df.select(
         F.col(id_col).alias("doc_b"), tokens(text_col).alias("__t")
@@ -485,15 +458,14 @@ def source_overlap_matrix(
     deciding per-source dedup order; within-source rates alone
     (near_dup_rate_by_source) can't see cross-feed copying.
 
-    Built on the PORTABLE MinHash-LSH pairs (shared cached index), so
+    Built on the MinHash-LSH pairs (shared cached index), so
     the whole matrix replays in DuckDB. Pairs are undirected: the cell
     key is (min(source), max(source)). Scale shape: the pair frame is
     LSH-pruned (never O(n²)); two uniform-id joins attach sources; one
     |sources|²-group aggregation ends it.
     """
     pairs = minhash_lsh_pairs(
-        df, threshold=threshold, text_col=text_col, id_col=id_col,
-        index=index, portable=True,
+        df, threshold=threshold, text_col=text_col, id_col=id_col, index=index
     )
     src = df.select(F.col(id_col).alias("__id"), F.col(source_col).alias("__src"))
     joined = (
@@ -536,8 +508,8 @@ def minhash_jaccard_diag(
     trusting a dedup threshold at 100 TB — E[est] = J per slot, so
     abs_err concentrates around sqrt(J(1-J)/n_hashes).
 
-    Uses the portable hash family so the whole table (estimates
-    included) is DuckDB-oracle-checkable. Exact Jaccard is computed ONLY
+    The MinHash family replays in DuckDB, so the whole table (estimates
+    included) is oracle-checkable. Exact Jaccard is computed ONLY
     for candidate pairs (the LSH-pruned set, not O(n²)): the tiny pair
     frame joins the shingle-set frame twice on the uniform doc id —
     exactly how a bucket-verified dedup confirms candidates at scale.
@@ -547,7 +519,7 @@ def minhash_jaccard_diag(
     """
     banded = index if index is not None else minhash_banded_index(
         df, text_col=text_col, id_col=id_col, n_hashes=n_hashes, bands=bands,
-        shingle=shingle, portable=True,
+        shingle=shingle,
     ).cache()
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -1294,10 +1266,28 @@ def save_minhash_index(index: DataFrame, path: str) -> None:
     index.write.mode("overwrite").parquet(path)
 
 
+def _require_string_bucket(index: DataFrame, path: str) -> DataFrame:
+    """Reject a banded MinHash index at rest whose ``bucket`` column is
+    not a string — the BIGINT bucket of an index written by an older
+    hash family, whose buckets never match this family's. Without the
+    check the bucket join fails deep inside the plan with a cast error
+    (ANSI) or silently matches nothing (non-ANSI). Returns ``index``."""
+    dtype = next((f.dataType for f in index.schema.fields if f.name == "bucket"), None)
+    if not isinstance(dtype, StringType):
+        found = "no bucket column" if dtype is None else f"bucket {dtype.simpleString()}"
+        raise ValueError(
+            f"MinHash index at {path} has {found}, expected a string bucket: "
+            "rebuild it with minhash_banded_index"
+        )
+    return index
+
+
 def load_minhash_index(spark, path: str) -> DataFrame:
     """Load a persisted banded signature index (id, signature, band,
-    bucket). Feed it to ``incremental_near_dedup(corpus_index=...)``."""
-    return spark.read.parquet(path)
+    bucket). Feed it to ``incremental_near_dedup(corpus_index=...)``.
+    Raises ``ValueError`` naming ``path`` when ``bucket`` is not a
+    string column (see ``_require_string_bucket``)."""
+    return _require_string_bucket(spark.read.parquet(path), path)
 
 
 def incremental_near_dedup(
@@ -1310,7 +1300,6 @@ def incremental_near_dedup(
     bands: int = 8,
     shingle: int = 3,
     threshold: float = 0.5,
-    portable: bool = False,
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup extension of ``incremental_dedup``: drop NEW docs whose
@@ -1321,8 +1310,8 @@ def incremental_near_dedup(
     ``save_minhash_index``, and pass the loaded table as
     ``corpus_index``: batches then never touch corpus text (exactly one
     of ``corpus`` / ``corpus_index`` must be given; the index must have
-    been built with the SAME n_hashes/bands/shingle/portable settings,
-    or band buckets won't line up).
+    been built with the SAME n_hashes/bands/shingle settings, or band
+    buckets won't line up).
 
     Scale shape: cross-frame bucket join instead of a self-join — cost
     O(Σ |new bucket|·|corpus bucket|), the same near-linear LSH trade;
@@ -1331,38 +1320,23 @@ def incremental_near_dedup(
     """
     if (corpus is None) == (corpus_index is None):
         raise ValueError("pass exactly one of corpus / corpus_index")
-    r = n_hashes // bands
 
-    def banded(df: DataFrame, side: str) -> DataFrame:
-        sigs = minhash_signatures(df, text_col, id_col, n_hashes, shingle, portable=portable)
-        return sigs.select(
+    def renamed(index: DataFrame, side: str) -> DataFrame:
+        return index.select(
             F.col("id").alias(f"{side}_id"),
             F.col("signature").alias(f"{side}_sig"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            _band_bucket(
-                                [F.col("signature")[b * r + i] for i in range(r)], portable
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(f"{side}_id", f"{side}_sig", "bb.band", "bb.bucket")
-
-    n_banded = banded(new, "new")
-    if corpus_index is not None:
-        c_banded = corpus_index.select(
-            F.col("id").alias("old_id"),
-            F.col("signature").alias("old_sig"),
             "band",
             "bucket",
         )
-    else:
-        c_banded = banded(corpus, "old")
+
+    def build(df: DataFrame) -> DataFrame:
+        return minhash_banded_index(
+            df, text_col=text_col, id_col=id_col, n_hashes=n_hashes, bands=bands,
+            shingle=shingle,
+        )
+
+    n_banded = renamed(build(new), "new")
+    c_banded = renamed(corpus_index if corpus_index is not None else build(corpus), "old")
     agree = F.size(
         F.filter(F.zip_with("new_sig", "old_sig", lambda x, y: x == y), lambda eq: eq)
     )
@@ -2280,7 +2254,7 @@ def lsh_tuning_report(
         )
     idx = minhash_banded_index(
         df, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
-        bands=n_hashes, shingle=shingle, portable=True,
+        bands=n_hashes, shingle=shingle,
     ).cache()
     a, b = idx.alias("a"), idx.alias("b")
     cand = (
@@ -2397,7 +2371,7 @@ def lsh_eval_report(
     truth ONLY (the jaccard_pairs contract); at 100 TB pass
     ``sample_fraction`` (deterministic md5 document sample) and read
     the report as an estimate. The LSH side is the production
-    minhash_lsh_pairs path (portable hashes, full oracle).
+    minhash_lsh_pairs path (full oracle).
 
     Output: one row — n_truth, n_lsh, n_true_pos, precision, recall,
     f1 (raw int/int doubles; F1's two float ops are order-pinned).
@@ -2426,7 +2400,7 @@ def lsh_eval_report(
     )
     lsh = minhash_lsh_pairs(
         df, text_col=text_col, id_col=id_col, n_hashes=n_hashes, bands=bands,
-        shingle=shingle, threshold=threshold, portable=True,
+        shingle=shingle, threshold=threshold,
     ).select("doc_a", "doc_b")
     tp = lsh.join(exact, ["doc_a", "doc_b"], "left_semi")
     counts = (
@@ -2857,7 +2831,6 @@ def minhash_dedup_incremental(
     bands: int = 8,
     shingle: int = 3,
     threshold: float = 0.5,
-    portable: bool = False,
 ) -> DataFrame:
     """STATUS-emitting steady-state near-dup dedup (round 11): the
     MinHash twin of ``similarity.semdedup_incremental``, upgrading
@@ -2877,7 +2850,7 @@ def minhash_dedup_incremental(
     nothing re-touches corpus docs beyond the bucket probe.
 
     Pass ``corpus_index`` (a persisted ``minhash_banded_index`` built
-    with the SAME n_hashes/bands/shingle/portable settings) for the
+    with the SAME n_hashes/bands/shingle settings) for the
     steady-state path that never touches corpus text. Scale shape:
     both joins are banded-bucket equi-joins (O(Σ |new bkt|·|corpus
     bkt|) and O(Σ bkt²) over the batch only); the verify step is
@@ -2903,7 +2876,7 @@ def minhash_dedup_incremental(
         else cache_once(
             minhash_banded_index(
                 new, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
-                bands=bands, shingle=shingle, portable=portable,
+                bands=bands, shingle=shingle,
             )
         )
     )
@@ -2912,7 +2885,7 @@ def minhash_dedup_incremental(
         if corpus_index is not None
         else minhash_banded_index(
             corpus, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
-            bands=bands, shingle=shingle, portable=portable,
+            bands=bands, shingle=shingle,
         )
     )
 

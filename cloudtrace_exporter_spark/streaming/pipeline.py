@@ -298,7 +298,7 @@ def stream_lsh_dedup_probe(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Near-dup screening AT INGEST: each streamed document runs the
-    SAME narrow-map portable-MinHash banding as the batch index build
+    SAME narrow-map MinHash banding as the batch index build
     (dedup.minhash_banded_index — pure select/transform/explode, fully
     stream-composable), then probes the STATIC corpus index with a
     stream-static equi-join on (band, bucket) and keeps matches whose
@@ -319,7 +319,7 @@ def stream_lsh_dedup_probe(
     from cloudtrace_exporter_spark.operators.dedup import minhash_banded_index
 
     probe = minhash_banded_index(
-        stream_docs, text_col=text_col, id_col=id_col, n_hashes=n_hashes, portable=True
+        stream_docs, text_col=text_col, id_col=id_col, n_hashes=n_hashes
     )
     s, c = probe.alias("s"), index.alias("c")
     agree = F.size(
@@ -1078,7 +1078,9 @@ def _read_prior_partitions(spark: SparkSession, index_dir: str, batch_id: int):
     streaming index with N < ``batch_id`` (a replayed batch must never
     probe its own rows), or None when no prior partition exists.
     Per-entry parse: one stray non-numeric dir must not silently empty
-    the index (that would re-admit every seen duplicate)."""
+    the index (that would re-admit every seen duplicate). A MinHash
+    index whose ``bucket`` is not a string raises ``ValueError`` naming
+    ``index_dir``."""
     import os
 
     try:
@@ -1096,11 +1098,16 @@ def _read_prior_partitions(spark: SparkSession, index_dir: str, batch_id: int):
             continue
     if not parts:
         return None
-    return (
+    prior = (
         spark.read.option("basePath", index_dir)
         .parquet(*[f"{index_dir}/{p}" for p in parts])
         .drop("batch_id")
     )
+    if "bucket" in prior.columns:  # a MinHash index (the phash one has none)
+        from cloudtrace_exporter_spark.operators.dedup import _require_string_bucket
+
+        _require_string_bucket(prior, index_dir)
+    return prior
 
 
 def minhash_dedup_foreach_batch(
@@ -1111,7 +1118,6 @@ def minhash_dedup_foreach_batch(
     bands: int = 8,
     shingle: int = 3,
     threshold: float = 0.5,
-    portable: bool = False,
     text_col: str = "text",
     id_col: str = "doc_id",
     on_batch=None,
@@ -1144,7 +1150,7 @@ def minhash_dedup_foreach_batch(
     partition (idempotent); the index read excludes partitions ≥ the
     current batch id, so a replay never probes its own kept rows.
     Warm-start from an existing corpus: write the corpus's banded index
-    (same n_hashes/bands/shingle/portable) into ``batch_id=-1`` before
+    (same n_hashes/bands/shingle) into ``batch_id=-1`` before
     starting the stream.
     """
     from cloudtrace_exporter_spark.operators import dedup as _dedup
@@ -1160,7 +1166,7 @@ def minhash_dedup_foreach_batch(
         # write too — no second signature build over the batch
         nb = _dedup.minhash_banded_index(
             batch_df, text_col=text_col, id_col=id_col,
-            n_hashes=n_hashes, bands=bands, shingle=shingle, portable=portable,
+            n_hashes=n_hashes, bands=bands, shingle=shingle,
         ).persist()
         if idx is None:
             idx = nb.limit(0)
@@ -1174,7 +1180,6 @@ def minhash_dedup_foreach_batch(
             bands=bands,
             shingle=shingle,
             threshold=threshold,
-            portable=portable,
         ).persist()
         kept = (
             verdicts.filter(F.col("status") == "kept")
@@ -1200,7 +1205,6 @@ def stream_minhash_dedup(
     bands: int = 8,
     shingle: int = 3,
     threshold: float = 0.5,
-    portable: bool = False,
     text_col: str = "text",
     id_col: str = "doc_id",
     on_batch=None,
@@ -1217,7 +1221,6 @@ def stream_minhash_dedup(
         bands=bands,
         shingle=shingle,
         threshold=threshold,
-        portable=portable,
         text_col=text_col,
         id_col=id_col,
         on_batch=on_batch,

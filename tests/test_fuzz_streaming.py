@@ -890,9 +890,7 @@ def test_sfz2_lsh_probe_and_percolators(spark, stream_fuzz_root, seed):
     )
 
     batch, stream = _doc_stream(spark, stream_fuzz_root, seed)
-    index = dedup_ops.minhash_banded_index(
-        batch.filter(F.col("doc_id") % 2 == 0), portable=True
-    ).cache()
+    index = dedup_ops.minhash_banded_index(batch.filter(F.col("doc_id") % 2 == 0)).cache()
     index.count()
     out = _drain(spark, stream_lsh_dedup_probe(stream, index, threshold=0.3))
     cols = ["new_id", "corpus_id", "est_jaccard"]

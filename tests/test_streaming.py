@@ -431,7 +431,7 @@ def test_streaming_lsh_dedup_probe_matches_batch(spark, tmp_path):
     src = str(tmp_path / "docs_new")
     new.coalesce(2).write.mode("overwrite").parquet(src)
 
-    index = dedup.minhash_banded_index(corpus, portable=True).cache()
+    index = dedup.minhash_banded_index(corpus).cache()
     stream = (
         spark.readStream.schema(FIXTURE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)

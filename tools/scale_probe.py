@@ -170,7 +170,7 @@ def main() -> None:
     from cloudtrace_exporter_spark.operators import layout
 
     def lsh_index(d):
-        return dedup.minhash_banded_index(d, portable=True).cache()
+        return dedup.minhash_banded_index(d).cache()
 
     for tag, d in (("1x", docs1), ("10x", docs10)):
         idx = lsh_index(d)

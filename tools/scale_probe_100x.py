@@ -93,7 +93,7 @@ def probe_lsh(spark) -> None:
         docs.count()
         planted = n // 100  # ids 1, 101, 201, ... pair with id-1
         t0 = time.time()
-        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.9, portable=True).cache()
+        pairs = dedup.minhash_lsh_pairs(docs, threshold=0.9).cache()
         total = pairs.count()
         found = pairs.filter(
             (F.col("doc_b") == F.col("doc_a") + 1) & (F.col("doc_a") % 100 == 0)
@@ -338,7 +338,7 @@ def probe_triangle(spark) -> None:
         # — uncached, the whole banded-LSH plan re-executes per subtree
         # (measured 449 s vs ~90 s at the 2M tier)
         pairs = (
-            dedup.minhash_lsh_pairs(docs, threshold=0.9, portable=True)
+            dedup.minhash_lsh_pairs(docs, threshold=0.9)
             .select("doc_a", "doc_b")
             .cache()
         )
