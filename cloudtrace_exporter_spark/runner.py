@@ -107,8 +107,14 @@ def run_pipeline(
     cypher_sink = foreach_batch_cypher_upsert(f"{target}/cypher", counters=counters["cypher"])
 
     def _both(batch_df: DataFrame, epoch_id: int) -> None:
-        graph_sink(batch_df, epoch_id)
-        cypher_sink(batch_df, epoch_id)
+        # Pinned so the stateful dedup plan runs once, not once per sink action;
+        # released blocking, so no block removal overlaps the next batch.
+        batch_df.persist()
+        try:
+            graph_sink(batch_df, epoch_id)
+            cypher_sink(batch_df, epoch_id)
+        finally:
+            batch_df.unpersist(blocking=True)
 
     if cfg.streams:
         if checkpoint is None:

@@ -110,6 +110,12 @@ def get_spark(app_name: str = "cloudtrace_exporter_spark", cpus: str | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Generated classes are cached by source text in an LRU split into
+        # 4 segments of maxEntries/4. At the default 100, the streaming
+        # ingest path (~110 classes) overflowed a segment on some runs and
+        # not others, and recompiled 1-51 classes a tick; at 256 every run
+        # compiles the same classes, and a steady tick compiles one.
+        .config("spark.sql.codegen.cache.maxEntries", "256")
         # Python workers get 15 s by default to connect back to the JVM;
         # under box contention (several Spark sessions sharing the host)
         # fork+exec of the daemon can exceed that, failing whole tasks with

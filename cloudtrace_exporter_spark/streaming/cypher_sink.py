@@ -137,8 +137,12 @@ def foreach_batch_cypher_upsert(
 
     With ``uri`` set (and the ``neo4j`` driver importable) rows go to the
     database from executors; otherwise a replayable UNWIND script + JSON
-    parameter files land under ``out_dir``. Failures are counted, never
-    raised (A13 accounting semantics, adapter.go:140-156)."""
+    parameter files land under ``out_dir``, one ``rows-<epoch>``
+    directory per non-empty epoch. An empty batch is counted as one batch
+    with nothing delivered and writes nothing. A failure is counted when
+    counters are attached (A13 accounting semantics,
+    adapter.go:140-156) and re-raised otherwise, so the batch replays
+    from the checkpoint."""
     if out_dir is None and uri is None:
         raise ValueError("need out_dir (script mode) or uri (live mode)")
 
@@ -146,6 +150,10 @@ def foreach_batch_cypher_upsert(
         try:
             rows = events_to_cypher_rows(batch_df)
             n = rows.count()
+            if n == 0:
+                if counters:
+                    counters.record(delivered=0)
+                return
             if uri is not None:
                 rows.foreachPartition(
                     _neo4j_partition_writer(
@@ -163,8 +171,10 @@ def foreach_batch_cypher_upsert(
                 )
             if counters:
                 counters.record(delivered=n)
-        except Exception as exc:  # count, never crash the stream (A13)
+        except Exception as exc:  # per-batch failure tolerated + counted (A13)
             if counters:
                 counters.record(failed=1, error=f"epoch {epoch_id}: {exc}")
+            else:
+                raise
 
     return _sink

@@ -60,12 +60,19 @@ def foreach_batch_graph_upsert(
     Neo4j Spark connector available, the same callback pushes batched
     ``UNWIND $rows MERGE ...`` Cypher instead (out-of-process, per
     BASELINE.json: "Neo4j graph writes are external").
+
+    An empty batch (the watermark's no-data batch) is counted as one
+    batch with nothing delivered and writes no table.
     """
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         try:
             n_in = batch_df.count()
+            if n_in == 0:
+                if counters:
+                    counters.record(delivered=0)
+                return
             nodes, edges = build_graph(batch_df)
             for kind, tables, keys in (
                 ("nodes", nodes, NODE_KEYS),

@@ -59,6 +59,87 @@ def test_stream_mode_matches_batch(spark, pages_dir, tmp_path):
     assert actions.select("id").distinct().count() == 1000
 
 
+def _graph_rows(tables):
+    """``{(kind, name): [(key, row), ...]}`` over node/edge tables in one
+    job; a row and a node's MERGE key are rendered as JSON strings, and an
+    edge's key is its whole row."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from cloudtrace_exporter_spark.schemas import NODE_KEYS
+
+    parts = []
+    for (kind, name), df in tables.items():
+        row = F.to_json(F.struct(*sorted(df.columns)))
+        key = F.to_json(F.struct(*NODE_KEYS[name])) if kind == "nodes" else row
+        parts.append(df.select(F.lit(kind).alias("kind"), F.lit(name).alias("name"),
+                               key.alias("key"), row.alias("row")))
+    out = {t: [] for t in tables}
+    for r in reduce(lambda a, b: a.unionByName(b), parts).collect():
+        out[(r["kind"], r["name"])].append((r["key"], r["row"]))
+    return out
+
+
+def test_stream_ticks_upsert_store_once_per_event(spark, tmp_path):
+    """Two ingest ticks on one checkpoint, the second re-delivering the
+    first window's tail: the store equals the batch graph of the distinct
+    events, each sink delivers every trace once, no-data epochs write no
+    Cypher rows, and no pinned batch is left cached."""
+    from cloudtrace_exporter_spark.operators.graph import build_graph
+
+    traces = normalize.events_as_traces(load_table(spark, SF, "events"))
+    # event-time windows of 600 and 420 traces; window 2 starts with the
+    # last 20 of window 1. A one-day watermark keeps those 20 in the dedup
+    # state, and every fresh trace of window 2 is later than window 1.
+    ids = [r["trace_id"] for r in traces.orderBy("time", "trace_id").collect()]
+    windows = {
+        1: traces.filter(traces.trace_id.isin(ids[:600])),
+        2: traces.filter(traces.trace_id.isin(ids[580:])),
+    }
+    landing = str(tmp_path / "pages")
+    os.makedirs(landing)
+    cfg = EngineConfig(streams=True, forward=True, from_minutes=1440)
+    out = str(tmp_path / "out")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    delivered = []
+    for k, window in windows.items():
+        staged = str(tmp_path / f"w{k}")
+        cts_pages.write_trace_pages(window, staged)
+        for f in os.listdir(staged):
+            if f.endswith(".json"):
+                os.rename(os.path.join(staged, f), os.path.join(landing, f"w{k}-{f}"))
+        _, counters = runner.run_pipeline(
+            spark, cfg, CTX, landing, graph_dir=out, checkpoint=str(tmp_path / "ckpt")
+        )
+        delivered.append({name: c.delivered for name, c in counters.items()})
+        assert counters["graph"].failed == counters["cypher"].failed == 0
+        assert counters["cypher"].batches > 1  # the watermark's no-data batch ran
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+    events = runner.build_events(spark, EngineConfig(streams=False), CTX, landing)
+    n_events = events.count()
+    assert n_events == 1000
+    assert delivered[0]["graph"] == delivered[0]["cypher"] == 600
+    assert delivered[1]["graph"] == delivered[1]["cypher"] == n_events - 600
+
+    nodes, edges = build_graph(events)
+    built = {("nodes", n): df for n, df in nodes.items()}
+    built.update({("edges", n): df for n, df in edges.items()})
+    expected = _graph_rows(built)
+    stored = _graph_rows(
+        {(kind, name): spark.read.parquet(f"{out}/graph/{kind}/{name}") for kind, name in built}
+    )
+    for table, rows in stored.items():
+        assert len({key for key, _ in rows}) == len(rows), table  # unique MERGE keys
+        assert {row for _, row in rows} == {row for _, row in expected[table]}, table
+
+    # one rows-<epoch> directory per data epoch, none for a no-data epoch
+    row_dirs = sorted(d for d in os.listdir(f"{out}/cypher") if d.startswith("rows-"))
+    assert len(row_dirs) == 2
+    assert spark.read.json(f"{out}/cypher/rows-*").count() == n_events
+
+
 def test_forward_gate_off_is_transform_only(spark, pages_dir):
     # CTS_X_PNP=false (the reference's actual default, main.go:26)
     cfg = EngineConfig(streams=False, forward=False)
@@ -76,7 +157,8 @@ def test_empty_input_is_normal_not_error(spark, tmp_path):
         spark, cfg, CTX, empty, graph_dir=str(tmp_path / "out")
     )
     assert events.count() == 0
-    assert counters["graph"].failed == 0
+    for c in counters.values():
+        assert (c.delivered, c.failed, c.batches) == (0, 0, 1)
 
 
 def test_lifecycle_end_to_end_with_restart(spark, pages_dir, tmp_path):

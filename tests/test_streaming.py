@@ -339,6 +339,43 @@ def test_cypher_sink_writes_replayable_unwind_script(spark, staged_events, tmp_p
     assert counters.failed == 0
 
 
+def test_sinks_count_empty_batch_and_write_nothing(spark, tmp_path):
+    """The watermark's no-data batch: each sink records one batch with
+    nothing delivered and leaves no parquet or JSON file behind."""
+    from cloudtrace_exporter_spark.schemas import EVENT_SCHEMA
+    from cloudtrace_exporter_spark.streaming.cypher_sink import foreach_batch_cypher_upsert
+
+    empty = spark.createDataFrame([], EVENT_SCHEMA)
+    for name, factory in (
+        ("graph", foreach_batch_graph_upsert),
+        ("cypher", foreach_batch_cypher_upsert),
+    ):
+        out_dir = str(tmp_path / name)
+        counters = DeliveryCounters()
+        factory(out_dir, counters=counters)(empty, 7)
+        assert (counters.batches, counters.delivered, counters.failed) == (1, 0, 0), name
+        written = [f for _, _, fs in os.walk(out_dir) for f in fs]
+        assert not [f for f in written if f.endswith((".parquet", ".json"))], name
+
+
+def test_cypher_sink_failure_raises_without_counters(spark, tmp_path):
+    """Like the graph sink and the JSONL sender: a failed write is counted
+    when counters are attached and re-raised otherwise, so the batch
+    replays from the checkpoint instead of vanishing."""
+    from cloudtrace_exporter_spark.schemas import EVENT_SCHEMA
+    from cloudtrace_exporter_spark.streaming.cypher_sink import foreach_batch_cypher_upsert
+
+    batch = spark.createDataFrame([("e1",) + (None,) * 11], EVENT_SCHEMA)
+    not_a_dir = tmp_path / "cypher"
+    not_a_dir.write_text("")
+    with pytest.raises(OSError):
+        foreach_batch_cypher_upsert(str(not_a_dir))(batch, 0)
+    counters = DeliveryCounters()
+    foreach_batch_cypher_upsert(str(not_a_dir), counters=counters)(batch, 0)
+    assert (counters.batches, counters.delivered, counters.failed) == (1, 0, 1)
+    assert counters.errors[0].startswith("epoch 0: ")
+
+
 def test_streaming_curation_matches_batch(spark, tmp_path):
     """quality_keep + redact_pii are narrow expressions, so they apply to
     a readStream unchanged — batch/stream parity for the curation path."""
