@@ -808,18 +808,20 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B34 IVF-probed approximate top-k (rows-only; recall vs q_cosine_topk
-    asserted in tests). The IVF index is a build-once session artifact:
-    the k-means build is the ingest-time step; steady-state queries pay
-    only the centroid probe + cell-pruned scoring (see
-    similarity.save_ivf_index for the at-rest equivalent)."""
+    """B34 IVF-probed approximate top-k, ORACLE-EXACT (the integer
+    k-means + probe of similarity.ivf_topk_scaled at 16 cells; recall vs
+    q_cosine_topk asserted in tests). The IVF index is a build-once
+    session artifact: the k-means build is the ingest-time step;
+    steady-state queries pay only the centroid probe + cell-pruned
+    scoring (see similarity.save_ivf_index for the at-rest
+    equivalent)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    index = artifact(
+    assigned, cents = artifact(
         spark, "ivf_index", sf_dir,
-        lambda: similarity.build_ivf_index(emb, n_centroids=16),
+        lambda: similarity._scaled_kmeans(emb, n_centroids=16, lloyd_iters=2, scale=10**6),
     )
-    return similarity.ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=16, n_probe=4, index=index
+    return similarity._ivf_probe_scaled(
+        assigned, emb.filter(F.col("vec_id") < 10), cents, k=5, n_probe=4, scale=10**6
     )
 
 
@@ -3234,13 +3236,12 @@ def q_ivf_filtered_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ivf_topk_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B34, ORACLE-EXACT IVF twin: the seed→2-round-Lloyd→4-probe
+    """B34, ORACLE-EXACT IVF at 8 cells: the seed→2-round-Lloyd→4-probe
     pipeline over INTEGER-quantized vectors (×1e6 BIGINTs) — exact
     integer distances, truncating-division centroid updates, integer
     dot/norm cosine — so the whole k-means index build replays in
-    DuckDB (similarity.ivf_topk_scaled); the float q_ivf_topk stays the
-    production path, this carries its correctness evidence (the
-    LSH-verified precedent applied to IVF)."""
+    DuckDB (similarity.ivf_topk_scaled). q_ivf_topk serves the same
+    pipeline at 16 cells from a session-cached index."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk_scaled(
         emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=8, n_probe=4
@@ -6951,7 +6952,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_type, count(*) AS n, round(sum(value), 2) + 0 AS sum_value
             FROM events GROUP BY event_type ORDER BY event_type
         """,
-        # q_ivf_topk: IVF cell assignment is engine-specific -> rows-only.
         "q_dup_rate_by_source": r"""
             SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(count(DISTINCT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))) AS BIGINT) AS n_unique,
@@ -7195,6 +7195,7 @@ def oracle_sql() -> dict[str, str]:
             FROM prof
         """,
         "q_ivf_topk_verified": _ivf_scaled_oracle_sql(),
+        "q_ivf_topk": _ivf_scaled_oracle_sql(n_centroids=16),
         "q_ivf_filtered_verified": _ivf_scaled_oracle_sql(allowed_labels=[3, 7, 9]),
         "q_pq_topk_verified": _pq_scaled_oracle_sql(),
         # round-8: two-tier PQ serving twin — integer shortlist + exact

@@ -293,7 +293,7 @@ def minhash_banded_index(
     key and the full signature — ``(id, signature, band, bucket)``.
 
     This is the build-once artifact of every LSH dedup pipeline (the
-    analog of ivf's ``build_ivf_index``): build it, ``.cache()`` or
+    analog of IVF's ``_scaled_kmeans``): build it, ``.cache()`` or
     persist it to parquet, and run the bucket join against it per batch.
     The banding select references the signature column bands×r times, so
     callers who don't materialize it pay the CollapseProject recompute
@@ -324,6 +324,35 @@ def minhash_banded_index(
             )
         ).alias("bb"),
     ).select("id", "signature", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
+def _sig_agreement(sig_a, sig_b) -> F.Column:
+    """Number of slots on which two MinHash signatures agree — the
+    numerator of the Jaccard estimate (divide by ``n_hashes``)."""
+    return F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda eq: eq))
+
+
+def _banded_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct LSH candidate pairs of a banded index: its self equi-join
+    on (band, bucket) with ``a.id < b.id``, one row per (doc_a, doc_b)
+    however many bands they collide in, carrying both signatures as
+    ``sig_a``/``sig_b``."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(
+            F.col("a.id").alias("doc_a"),
+            F.col("b.id").alias("doc_b"),
+            F.col("a.signature").alias("sig_a"),
+            F.col("b.signature").alias("sig_b"),
+        )
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
 
 
 def minhash_lsh_pairs(
@@ -363,21 +392,11 @@ def minhash_lsh_pairs(
             df, text_col=text_col, id_col=id_col, n_hashes=n_hashes, bands=bands,
             shingle=shingle,
         ).cache()
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"),
-                F.col("a.signature").alias("sig_a"), F.col("b.signature").alias("sig_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
     return (
-        cand.withColumn("est_jaccard", F.round(agree / F.lit(n_hashes), 6))
+        _banded_candidates(banded)
+        .withColumn(
+            "est_jaccard", F.round(_sig_agreement("sig_a", "sig_b") / F.lit(n_hashes), 6)
+        )
         .filter(F.col("est_jaccard") >= threshold)
         .select("doc_a", "doc_b", "est_jaccard")
     )
@@ -521,15 +540,9 @@ def minhash_jaccard_diag(
         df, text_col=text_col, id_col=id_col, n_hashes=n_hashes, bands=bands,
         shingle=shingle,
     ).cache()
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"),
-                F.col("a.signature").alias("sig_a"), F.col("b.signature").alias("sig_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
+    est = _banded_candidates(banded).select(
+        "doc_a", "doc_b", (_sig_agreement("sig_a", "sig_b") / F.lit(n_hashes)).alias("est_jaccard")
     )
-    agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq))
-    est = cand.select("doc_a", "doc_b", (agree / F.lit(n_hashes)).alias("est_jaccard"))
     toked = df.select(F.col(id_col).alias("id"), tokens(text_col).alias("__t"))
     sh = toked.select("id", _shingles(F.col("__t"), shingle).alias("s"))
     j = (
@@ -1337,13 +1350,10 @@ def incremental_near_dedup(
 
     n_banded = renamed(build(new), "new")
     c_banded = renamed(corpus_index if corpus_index is not None else build(corpus), "old")
-    agree = F.size(
-        F.filter(F.zip_with("new_sig", "old_sig", lambda x, y: x == y), lambda eq: eq)
-    )
     matched = (
         n_banded.join(c_banded, ["band", "bucket"])
         .dropDuplicates(["new_id", "old_id"])
-        .withColumn("est_jaccard", agree / F.lit(n_hashes))
+        .withColumn("est_jaccard", _sig_agreement("new_sig", "old_sig") / F.lit(n_hashes))
         .filter(F.col("est_jaccard") >= threshold)
         .select(F.col("new_id").alias(id_col))
         .distinct()
@@ -1902,9 +1912,9 @@ def _containment_verify(pairs: DataFrame, threshold: float) -> DataFrame:
     """Exact containment scoring over a candidate-pair frame carrying
     ``a.id/a.tok/b.id/b.tok`` (aliased sides): inner = smaller token set
     (ties to the lower id), containment = |A∩B| / |inner|, rounded and
-    thresholded — the shared verification tail of the exact theta join
-    and the prefix-filtered candidate path, so both emit bit-identical
-    scores."""
+    thresholded — the verification tail of the exact theta join, and the
+    reference the prefix-filtered path's Arrow kernel and bitset tier
+    match bit-for-bit."""
     sa, sb = F.size(F.col("a.tok")), F.size(F.col("b.tok"))
     inter = F.size(F.array_intersect(F.col("a.tok"), F.col("b.tok")))
     a_inner = (sa < sb) | ((sa == sb) & (F.col("a.id") < F.col("b.id")))
@@ -2009,7 +2019,6 @@ def containment_pairs_blocked(
     text_col: str = "text",
     id_col: str = "doc_id",
     _cache: bool = True,
-    _kernel: bool = True,
     bitset_vocab: int = 64,
 ) -> DataFrame:
     """Scale-true containment pairs via EXACT prefix filtering (the
@@ -2201,12 +2210,10 @@ def containment_pairs_blocked(
     # round 12 (r11 verdict order #4): the exact-verify kernel — the
     # dominant real compute of the adversarial fixture (449k candidate
     # pairs) — runs as one Arrow-batched set intersection per batch
-    # instead of a per-pair array_intersect hash build. Bit-identical
-    # (test_fast_paths pins kernel == expression); ``_kernel=False``
-    # keeps the pure-JVM expression path.
-    if _kernel:
-        return _containment_verify_arrow(pairs, threshold)
-    return _containment_verify(pairs, threshold)
+    # instead of a per-pair array_intersect hash build. Bit-identical to
+    # the exact theta join's _containment_verify (pinned by
+    # test_fast_paths against containment_pairs).
+    return _containment_verify_arrow(pairs, threshold)
 
 
 def lsh_tuning_report(
@@ -2256,26 +2263,9 @@ def lsh_tuning_report(
         df, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
         bands=n_hashes, shingle=shingle,
     ).cache()
-    a, b = idx.alias("a"), idx.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            F.col("a.signature").alias("sig_a"),
-            F.col("b.signature").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    base = _banded_candidates(idx).select(
+        "sig_a", "sig_b", _sig_agreement("sig_a", "sig_b").alias("__agree")
     )
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq)
-    )
-    base = cand.select("sig_a", "sig_b", agree.alias("__agree"))
     bucket = F.least(F.floor(F.col("__agree") * 10 / n_hashes), F.lit(9)).cast("long")
 
     configs = []
@@ -2889,9 +2879,6 @@ def minhash_dedup_incremental(
         )
     )
 
-    def agree(sa, sb) -> F.Column:
-        return F.size(F.filter(F.zip_with(sa, sb, lambda x, y: x == y), lambda eq: eq))
-
     a, c = nb.alias("a"), cb.alias("c")
     corpus_dups = (
         a.join(
@@ -2899,7 +2886,7 @@ def minhash_dedup_incremental(
             (F.col("a.band") == F.col("c.band")) & (F.col("a.bucket") == F.col("c.bucket")),
         )
         .filter(
-            agree(F.col("a.signature"), F.col("c.signature")) / F.lit(n_hashes)
+            _sig_agreement(F.col("a.signature"), F.col("c.signature")) / F.lit(n_hashes)
             >= F.lit(threshold)
         )
         .select(F.col("a.id").alias("id"))
@@ -2915,7 +2902,7 @@ def minhash_dedup_incremental(
             & (F.col("sa.id") < F.col("sb.id")),
         )
         .filter(
-            agree(F.col("sa.signature"), F.col("sb.signature")) / F.lit(n_hashes)
+            _sig_agreement(F.col("sa.signature"), F.col("sb.signature")) / F.lit(n_hashes)
             >= F.lit(threshold)
         )
         .select(F.col("sa.id").alias("ia"), F.col("sb.id").alias("ib"))

@@ -11,8 +11,8 @@ Two tiers:
   against a fixed random hyperplane family coarse-quantize the corpus;
   neighbors are searched only within matching buckets (optionally
   multi-probe by flipping low-confidence bits). Recall<1, cost ~O(n/2^bits
-  per bucket). An IVF variant would swap the hash for k-means centroids —
-  same join shape.
+  per bucket). The IVF tier (ivf_topk_scaled) swaps the hash for integer
+  k-means centroids — same join shape.
 
 All vector math is built-in higher-order functions (zip_with/aggregate),
 JVM-side, over ``array<double>`` — no UDF in either path.
@@ -47,6 +47,13 @@ def _as_double(vec_col: str) -> F.Column:
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
 
+def _quantize(vec_col: str, scale: int) -> F.Column:
+    """``vec_col`` as a BIGINT array, each dim rounded at ×``scale`` — the
+    integer form every oracle-exact vector operator computes on (DuckDB
+    replays it as ``round(x * scale)``)."""
+    return F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+
+
 def _dot(a: F.Column, b: F.Column) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
@@ -66,23 +73,17 @@ def _safe_cosine(cv: F.Column, qv: F.Column) -> F.Column:
     return F.when((cn > 0.0) & (qn > 0.0), F.round(_dot(cv, qv) / (cn * qn), 6))
 
 
-def _matrix_lit(vectors: list[list[float]]) -> F.Column:
-    """A list of double vectors as ONE parser-built nested array literal.
+def _matrix_sql(vectors: list[list[float]]) -> str:
+    """A list of double vectors as ONE nested-array SQL literal.
 
     Building plane/centroid matrices element-by-element with ``F.lit``
     costs a py4j round-trip per element (~4000 for 16×64 planes ×2 sides
     — measured ~3 s of pure driver time before any action) and leaves
-    Catalyst a 1000-literal tree to re-analyze per call. One ``F.expr``
-    string parses in milliseconds and constant-folds to the same doubles:
+    Catalyst a 1000-literal tree to re-analyze per call. One SQL string
+    parses in milliseconds and constant-folds to the same doubles:
     ``repr(x)`` round-trips to the identical IEEE double the SQL parser
     produces for ``<repr>D``.
     """
-    return F.expr(_matrix_sql(vectors))
-
-
-def _matrix_sql(vectors: list[list[float]]) -> str:
-    """The nested-array literal of _matrix_lit as SQL text, for call
-    sites that embed it in a larger selectExpr string."""
     rows = ",".join("array(" + ",".join(repr(x) + "D" for x in v) + ")" for v in vectors)
     return f"array({rows})"
 
@@ -261,94 +262,6 @@ def hyperplane_bucket(vec: F.Column, planes: list[list[float]]) -> F.Column:
     return bucket
 
 
-def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
-    d = F.zip_with(a, b, lambda x, y: x - y)
-    return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x * x)
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    *,
-    n_centroids: int = 16,
-    lloyd_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """IVF (inverted-file) index: k-means-style centroids + per-vector
-    cell assignment, all DataFrame ops.
-
-    Seeding is deterministic (the ``n_centroids`` lowest ids), refined by
-    ``lloyd_iters`` Lloyd steps: assign each vector to its nearest
-    centroid (broadcast centroids — they are tiny by construction), then
-    recompute centroids as per-cell means via posexplode + groupBy —
-    one shuffle of (cell, pos, val) triples per iteration, never a
-    collect of vectors.
-
-    Returns ``(assigned, centroids)``: the corpus with a ``cell`` column,
-    and the centroid table ``(cell, centroid)``. At 100 TB the index
-    build is a few passes over the data; the per-query probe then touches
-    ``n_probe/n_centroids`` of the corpus (see ivf_topk).
-    """
-    v = _spread(corpus).select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
-    spark = corpus.sparkSession
-    seed = (
-        v.orderBy("id").limit(n_centroids)
-        .select(F.row_number().over(Window.orderBy("id")).alias("cell"), F.col("v").alias("centroid"))
-    )
-    # Centroids are collected per round (n_centroids × dim doubles —
-    # kilobytes by construction; NEVER the vectors). Iterative algorithms
-    # must truncate lineage per round, or every iteration's plan stacks
-    # under the next; re-entering the centroids as literals also turns
-    # per-vector assignment into a narrow map (no join, no window, no
-    # shuffle of the corpus) — the standard Spark k-means shape.
-    cent_rows = seed.collect()
-    if not cent_rows:
-        # EMPTY corpus — reference A12 semantics: the index of an empty
-        # corpus is an empty assignment + empty centroid table, not an
-        # error (the first batch of a new tenant has no vectors yet)
-        empty_assigned = v.withColumn("cell", F.lit(1)).select("id", "v", "cell")
-        return empty_assigned, spark.createDataFrame(
-            [], schema="cell int, centroid array<double>"
-        )
-    for _ in range(lloyd_iters):
-        assigned = v.withColumn("cell", _nearest_cell(F.col("v"), cent_rows))
-        cent_rows = (
-            assigned.select("cell", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.avg("val").alias("mean_val"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mean_val"))),
-                    lambda s: s["mean_val"],
-                ).alias("centroid")
-            )
-            .collect()
-        )
-    assigned = v.withColumn("cell", _nearest_cell(F.col("v"), cent_rows)).select("id", "v", "cell")
-    centroids = spark.createDataFrame(cent_rows, schema="cell int, centroid array<double>")
-    return assigned, centroids
-
-
-def _nearest_cell(v: F.Column, cent_rows) -> F.Column:
-    """Nearest-centroid cell id as a pure narrow expression: the centroid
-    table rides in as a literal matrix (see _matrix_lit), distances via
-    one transform, argmin via array_sort on (dist, cell) structs — ties
-    break on the lower cell id, matching the previous window-based
-    row_number ordering."""
-    rows = sorted(cent_rows, key=lambda r: r["cell"])
-    m = _matrix_lit([list(r["centroid"]) for r in rows])
-    cells = F.expr("array(" + ",".join(str(int(r["cell"])) for r in rows) + ")")
-    ranked = F.array_sort(
-        F.zip_with(
-            F.transform(m, lambda c: _sq_dist(v, c)),
-            cells,
-            lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-        )
-    )
-    return F.element_at(ranked, 1)["c"]
-
-
 def _trunc_div(a: int, b: int) -> int:
     """Integer division truncating toward zero — DuckDB's ``//`` (and C's
     ``/``) semantics, NOT Python's floor ``//`` (they differ on negative
@@ -356,12 +269,6 @@ def _trunc_div(a: int, b: int) -> int:
     ``//`` in DuckDB, so the driver-side update must truncate too)."""
     q = abs(a) // abs(b)
     return q if (a >= 0) == (b >= 0) else -q
-
-
-def _int_sq_dist(a: F.Column, b: F.Column) -> F.Column:
-    """Exact BIGINT squared distance between integer-quantized vectors."""
-    d = F.zip_with(a, b, lambda x, y: x - y)
-    return F.aggregate(d, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
 
 
 def _ranked_cells_sql(col: str, cents: list[tuple[int, list[int]]]) -> str:
@@ -422,7 +329,7 @@ def _scaled_kmeans(
     centroid list). Centroid collects are n_centroids × dim ints — KBs,
     the sanctioned index-artifact collect; assignment is a narrow
     literal-matrix argmin (no join, no corpus shuffle)."""
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     # the quantized corpus is read by the seed collect, EVERY Lloyd
     # round's (cell, pos) aggregation, and the final assignment — one
     # materialization instead of lloyd_iters+2 replays of the upstream
@@ -475,23 +382,26 @@ def ivf_topk_scaled(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ORACLE-EXACT IVF twin: the same seed→Lloyd→probe pipeline as
-    build_ivf_index/ivf_topk, run over INTEGER-quantized vectors
-    (dims ×1e6 as BIGINTs). Float k-means is engine-private (summation
-    order moves centroids by ulps, which can flip a boundary vector's
-    cell) — quantized, every distance is an exact BIGINT sum, every
-    centroid update an exact integer-sum truncating division, and the
-    final cosine divides exact integer dot/norm sums, so the WHOLE
-    index build and probe replay bit-exact in DuckDB (the pagerank/
-    k-core precedent applied to k-means). Quantization error vs the
-    float path is O(1/scale) per dim — cell boundaries land identically
-    except at genuine micro-ties.
+    """IVF-probed approximate cosine top-k, ORACLE-EXACT: deterministic
+    lowest-id seeding, ``lloyd_iters`` Lloyd rounds and the ``n_probe``
+    cell probe, all over INTEGER-quantized vectors (dims ×``scale`` as
+    BIGINTs). Float k-means would be engine-private (summation order
+    moves centroids by ulps, which can flip a boundary vector's cell) —
+    quantized, every distance is an exact BIGINT sum, every centroid
+    update an exact integer-sum truncating division, and the final
+    cosine divides exact integer dot/norm sums, so the WHOLE index build
+    and probe replay bit-exact in DuckDB (the pagerank/k-core precedent
+    applied to k-means).
 
-    Plan shape is identical to the float path: centroids collect per
-    round (n_centroids × dim ints — KBs, the sanctioned index-artifact
-    collect), assignment is a narrow literal-matrix argmin, the per-dim
-    update is one (cell, pos) aggregation; the probe is the same
-    literal-ranked cell selection + candidate equi-join.
+    Plan shape: centroids collect per round (n_centroids × dim ints —
+    KBs, the sanctioned index-artifact collect), assignment is a narrow
+    literal-matrix argmin, the per-dim update is one (cell, pos)
+    aggregation; the probe is a literal-ranked cell selection +
+    candidate equi-join on the cell, so each query reads
+    ``n_probe/n_centroids`` of the corpus (n_probe = n_centroids
+    degenerates to exact brute force). To serve many query batches from
+    one build, keep the ``_scaled_kmeans`` result (or persist it with
+    save_ivf_index) and call ``_ivf_probe_scaled`` per batch.
     """
     assigned, cents = _scaled_kmeans(
         corpus,
@@ -522,7 +432,7 @@ def _ivf_probe_scaled(
     variant: literal-ranked n_probe cell selection per query, candidate
     equi-join on the cell, exact integer dot/norm cosine, (query, rank)
     window top-k."""
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     # probe: same literal ranking over the final centroids
     q = queries.select(F.col(id_col).alias("query_id"), qvec.alias("qv"))
     q_cells = q.select(
@@ -558,90 +468,41 @@ def _ivf_probe_scaled(
     )
 
 
-def save_ivf_index(assigned: DataFrame, centroids: DataFrame, path: str) -> None:
-    """Persist an IVF index: cell-partitioned assigned vectors (so a
-    probe reads only its cells' files — partition pruning IS the index
-    at rest) + the centroid table. The index lifecycle every production
-    ANN service runs: build once, serve many."""
+def save_ivf_index(
+    assigned: DataFrame, cents: list[tuple[int, list[int]]], scale: int, path: str
+) -> None:
+    """Persist an IVF index built by ``_scaled_kmeans``: cell-partitioned
+    assigned vectors (so a probe reads only its cells' files — partition
+    pruning IS the index at rest) + the integer centroid table with the
+    ``scale`` its vectors were quantized at. The index lifecycle every
+    production ANN service runs: build once, serve many."""
     assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/assigned")
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
+    assigned.sparkSession.createDataFrame(
+        [(cell, c, scale) for cell, c in cents],
+        "cell int, centroid array<bigint>, scale bigint",
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
-def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
+def load_ivf_index(
+    spark, path: str
+) -> tuple[DataFrame, list[tuple[int, list[int]]], int]:
+    """Load a persisted IVF index as ``(assigned, cents, scale)`` — feed
+    them to ``_ivf_probe_scaled(assigned, queries, cents, scale=scale)``.
+    Raises ``ValueError`` naming ``path`` when the centroids are not
+    BIGINT arrays with a scale (an index written by the float k-means,
+    whose cells no integer probe can rank)."""
+    table = spark.read.parquet(f"{path}/centroids")
+    fields = {f.name: f.dataType.simpleString() for f in table.schema.fields}
+    if fields.get("centroid") != "array<bigint>" or "scale" not in fields:
+        found = f"centroid {fields['centroid']}" if "centroid" in fields else "no centroid column"
+        raise ValueError(
+            f"IVF index at {path} has {found}, expected array<bigint> centroids "
+            "with their scale: rebuild it with _scaled_kmeans"
+        )
+    rows = table.select("cell", "centroid", "scale").collect()
+    cents = sorted((r["cell"], list(r["centroid"])) for r in rows)
     assigned = spark.read.parquet(f"{path}/assigned").select("id", "v", "cell")
-    centroids = spark.read.parquet(f"{path}/centroids").select("cell", "centroid")
-    return assigned, centroids
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via IVF probing: score queries only
-    against the ``n_probe`` nearest cells' vectors.
-
-    The probe set is an equi-join on ``cell`` — at scale, the corpus is
-    pre-partitioned (or bucketed) by cell, so each query reads
-    ``n_probe/n_centroids`` of the data. Recall grows with n_probe;
-    n_probe = n_centroids degenerates to exact brute force. Pass a
-    prebuilt/loaded ``index`` (see save/load_ivf_index) to skip the
-    k-means build — the serve path.
-    """
-    assigned, centroids = index if index is not None else build_ivf_index(
-        corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    )
-    # the centroid table is kilobytes by construction (sanctioned collect,
-    # like the per-round Lloyd collect in build_ivf_index): re-entering it
-    # as a literal matrix makes cell-probe selection a narrow map instead
-    # of a broadcast join + per-query window
-    cent_rows = sorted(centroids.collect(), key=lambda r: r["cell"])
-    if not cent_rows:
-        # EMPTY index (A12): no cells to probe — an empty, schema-correct
-        # top-k, not an error
-        return queries.sparkSession.createDataFrame(
-            [], schema="query_id long, corpus_id long, cosine double, rnk int"
-        )
-    m = _matrix_lit([list(r["centroid"]) for r in cent_rows])
-    cells = F.expr("array(" + ",".join(str(int(r["cell"])) for r in cent_rows) + ")")
-    ranked = F.array_sort(
-        F.zip_with(
-            F.transform(m, lambda c: _sq_dist(F.col("qv"), c)),
-            cells,
-            lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-        )
-    )
-    probe_cells = F.transform(F.slice(ranked, 1, n_probe), lambda s: s["c"])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    q_cells = q.select("query_id", "qv", "qn", F.explode(probe_cells).alias("cell"))
-    scored = (
-        assigned.withColumnRenamed("id", "corpus_id")
-        .withColumn("vn", _norm(F.col("v")))
-        .join(F.broadcast(q_cells), "cell")
-        .filter(F.col("corpus_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            F.when(
-                (F.col("vn") > 0.0) & (F.col("qn") > 0.0),
-                F.round(_dot(F.col("v"), F.col("qv")) / (F.col("vn") * F.col("qn")), 6),
-            ).alias("cosine"),  # zero-vector guard (see _safe_cosine)
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "corpus_id", "cosine", "rnk")
-    )
+    return assigned, cents, rows[0]["scale"]
 
 
 def _lsh_hashed(df: DataFrame, keep: str, vcol: str, planes_sql: str, n_bits: int, n_tables: int) -> DataFrame:
@@ -691,14 +552,14 @@ def build_lsh_index(
     once per vector here instead of once per scored pair) and the
     multi-table hash rows (``corpus_id, tbl, bkt``).
 
-    Like build_ivf_index / minhash_banded_index this is the build-once
+    Like _scaled_kmeans / minhash_banded_index this is the build-once
     artifact: cache or persist both tables and every query batch pays
     only the bucket probe + candidate scoring.
     """
     tables = [hyperplane_planes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)]
     # one flat (n_tables·n_bits)×dim literal matrix, row j = table j//n_bits,
     # bit j%n_bits — semantically identical to per-plane hyperplane_bucket
-    # calls, but the tree is ~50 nodes instead of ~2000 (see _matrix_lit)
+    # calls, but the tree is ~50 nodes instead of ~2000 (see _matrix_sql)
     planes_sql = _matrix_sql([p for tbl in tables for p in tbl])
     c = _spread(corpus).select(F.col(id_col).alias("corpus_id"), _as_double(vec_col).alias("cv"))
     vecs = c.withColumn("cn", _norm(F.col("cv")))
@@ -778,7 +639,7 @@ def sign_block_pairs(
     instead of silently submitting the join. Costs one bounded agg
     (≤2^n_bits rows) per call; ``None`` disables.
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     bkt = sum(
         (
             F.when(F.element_at("v", i + 1) > 0, F.lit(1 << i).cast("long")).otherwise(
@@ -974,7 +835,7 @@ def embedding_outliers_scaled(
     centroids, never data rows); distance is then a narrow map and the
     only other shuffle is the per-label top-k window over tiny groups.
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     v = _spread(emb).select(
         F.col(id_col).alias("id"), F.col(label_col).alias("label"), qvec.alias("v")
     )
@@ -1071,11 +932,11 @@ def pq_train(
     the per-row assigned cell, groupBy recomputes every centroid of
     every subspace together, and the driver collects m·k·(dim/m) doubles
     (= one full vector's worth per centroid — KBs). Assignment is a
-    narrow map over literal codebook matrices (see _matrix_lit); the
+    narrow map over literal codebook matrices (see _matrix_sql); the
     corpus never shuffles.
 
     Seeding: subspace j starts from the first ``k`` vectors' j-th
-    subvectors (deterministic, like build_ivf_index).
+    subvectors (deterministic, like _scaled_kmeans).
     """
     v = _spread(corpus).select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
     first = v.orderBy("id").limit(k).select("v").collect()
@@ -1228,7 +1089,7 @@ def pq_topk_scaled(
     are narrow literal-matrix maps; the only shuffle is the per-query
     ranking window.
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     v = _spread(corpus).select(F.col(id_col).alias("id"), qvec.alias("v"))
     first = v.orderBy("id").limit(kc).collect()
     if not first:
@@ -1765,7 +1626,7 @@ def label_separation_matrix(
     (the IVF discipline: collect moves centroids, never data rows);
     every pairwise step runs on the |labels|-row frame.
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     v = _spread(emb).select(F.col(label_col).alias("label"), qvec.alias("v"))
     sums = (
         v.select("label", F.posexplode("v").alias("pos", "val"))
@@ -1788,7 +1649,7 @@ def label_separation_matrix(
             [],
             schema="label_a int, label_b int, n_a long, n_b long, centroid_cosine double",
         )
-    # centroids ride as JVM LITERALS (the _matrix_lit discipline), NOT
+    # centroids ride as JVM LITERALS (the _matrix_sql discipline), NOT
     # createDataFrame: a Python-rows frame scans through a Python RDD,
     # and the self-join scans it twice — two Python-worker spin-ups for
     # 10 rows (~20 s of pure overhead measured); the literal frame is
@@ -1865,12 +1726,12 @@ def mutual_nn_pairs(
     Scale shape: groups A and B reduce to id+quantized-vector frames;
     the pair scoring is one equi-free join bounded by |A|·|B| — at
     production scale feed group frames pre-filtered by an ANN stage
-    (ivf_topk/lsh_topk candidates) and this operator becomes the exact
+    (ivf_topk_scaled/lsh_topk candidates) and this operator becomes the exact
     mutual-verify tail; the two argmaxes are group-keyed aggregations
     on the scored frame (no windows), and the mutual check is a tiny
     |A|-row ⋈ |B|-row equi-join.
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     self_dot = F.aggregate(
         F.zip_with("v", "v", lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -1960,7 +1821,7 @@ def mmr_rerank(
     Returns (query_id, pick, doc_id, rel, maxsim) — pick = 1..k in
     selection order; maxsim NULL on the first pick (empty slate).
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     base = emb.select(F.col(id_col).alias("id"), qvec.alias("v"))
     queries = base.orderBy("id").limit(n_queries).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
@@ -2151,7 +2012,7 @@ def dbscan_embeddings(
     true ε-pair) but never precision — role logic and CC are
     pair-source-agnostic, the dedup_clusters argument.
     """
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     self_dot = F.aggregate(
         F.zip_with("v", "v", lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -2289,7 +2150,7 @@ def power_iteration_vector(
     rounds; see dominant_direction for the exactness contract."""
     import math
 
-    qvec = F.transform(_as_double(vec_col), lambda v: F.round(v * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     x = cache_once(emb.select(qvec.alias("x")))
     w = [wscale] * dim
     for _ in range(rounds):
@@ -2409,7 +2270,7 @@ def anisotropy_report(
         emb, rounds=rounds, scale=scale, wscale=wscale, dim=dim, vec_col=vec_col
     )
     ww = sum(int(c) * int(c) for c in w)
-    qvec = F.transform(_as_double(vec_col), lambda v: F.round(v * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     w_lit = F.expr("array(" + ", ".join(f"{int(c)}L" for c in w) + ")")
     n2 = F.aggregate(
         F.zip_with("x", "x", lambda a, b: a * b), F.lit(0).cast("long"), lambda s, v: s + v
@@ -2780,7 +2641,7 @@ def semdedup_incremental(
         id_col=id_col,
         vec_col=vec_col,
     )
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     self_dot = F.aggregate(
         F.zip_with("v", "v", lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -2937,7 +2798,7 @@ def _contam_eval_probe(
     (eval vector, probed cell): quantized vector, BIGINT self-norm, and
     the n_probe literal-ranked nearest corpus-trained cells. Build once,
     persist/broadcast, probe forever (the streaming prep artifact)."""
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     ev = eval_set.select(F.col(id_col).alias("eid"), qvec.alias("ev"))
     return ev.select(
         "eid",

@@ -184,7 +184,7 @@ def bm25_topk(
 ) -> DataFrame:
     """BM25 lexical retrieval: top-k documents per query under the
     Okapi/Lucene scoring function — the sparse-retrieval baseline that
-    sits next to the dense ANN paths (similarity.lsh_topk/ivf_topk) in
+    sits next to the dense ANN paths (similarity.lsh_topk/ivf_topk_scaled) in
     any retrieval or contamination-audit pipeline. idf uses the
     always-positive Lucene form ln(1 + (N − df + 0.5)/(df + 0.5));
     each distinct query term counts once (standard short-query BM25).

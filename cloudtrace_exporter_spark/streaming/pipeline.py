@@ -268,24 +268,28 @@ def stateful_running_totals_v2(stream: DataFrame) -> DataFrame:
 
 
 def stream_assign_cells(
-    stream: DataFrame, cent_rows, *, id_col: str = "vec_id", vec_col: str = "embedding"
+    stream: DataFrame,
+    cents: list[tuple[int, list[int]]],
+    *,
+    scale: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
     """Vector-index serving AT INGEST: assign each streamed embedding to
     its nearest IVF cell with the literal-centroid narrow map
-    (similarity._nearest_cell) — no join, no state, no shuffle, so it
-    composes with any streaming source and writes a cell-partitioned
-    index incrementally (the streaming half of build-once/serve-many:
-    batch trains the centroids, the stream keeps the index current).
-    ``cent_rows`` are collected (cell, centroid) rows from
-    build_ivf_index / load_ivf_index — kilobytes."""
-    from pyspark.sql import functions as F
+    (similarity._nearest_scaled over the ×``scale``-quantized vector) —
+    no join, no state, no shuffle, so it composes with any streaming
+    source and writes a cell-partitioned index incrementally (the
+    streaming half of build-once/serve-many: batch trains the
+    centroids, the stream keeps the index current). ``cents`` and
+    ``scale`` are the integer centroid list and quantization scale from
+    similarity._scaled_kmeans / load_ivf_index — kilobytes. Emits
+    ``(id, v, cell)``, the assigned-table schema of the batch index."""
+    from cloudtrace_exporter_spark.operators.similarity import _nearest_scaled, _quantize
 
-    from cloudtrace_exporter_spark.operators.similarity import _as_double, _nearest_cell
-
-    v = _as_double(vec_col)
     return stream.select(
-        F.col(id_col).alias("id"), v.alias("v")
-    ).withColumn("cell", _nearest_cell(F.col("v"), cent_rows))
+        F.col(id_col).alias("id"), _quantize(vec_col, scale).alias("v")
+    ).withColumn("cell", _nearest_scaled("v", cents))
 
 
 def stream_lsh_dedup_probe(
@@ -316,18 +320,13 @@ def stream_lsh_dedup_probe(
     """
     from pyspark.sql import functions as F
 
-    from cloudtrace_exporter_spark.operators.dedup import minhash_banded_index
+    from cloudtrace_exporter_spark.operators.dedup import _sig_agreement, minhash_banded_index
 
     probe = minhash_banded_index(
         stream_docs, text_col=text_col, id_col=id_col, n_hashes=n_hashes
     )
     s, c = probe.alias("s"), index.alias("c")
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("s.signature"), F.col("c.signature"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
+    agree = _sig_agreement(F.col("s.signature"), F.col("c.signature"))
     return (
         s.join(c, (F.col("s.band") == F.col("c.band")) & (F.col("s.bucket") == F.col("c.bucket")))
         .select(
@@ -369,9 +368,9 @@ def stream_adc_scores(
     """ADC serving AT INGEST: score every streamed vector against the
     registered queries' precomputed subspace-distance tables. Each
     query's m×k table (||q_sub_j − books[j][cell]||², the same left-fold
-    order as similarity._sq_dist, so the doubles are bit-identical to
-    the batch pq_topk scores) is computed driver-side from the KB-sized
-    codebooks and enters the plan as a literal — encoding plus scoring
+    order as pq_topk's ADC table expression, so the doubles are
+    bit-identical to the batch pq_topk scores) is computed driver-side
+    from the KB-sized codebooks and enters the plan as a literal — encoding plus scoring
     is ONE narrow map with an in-row explode over the query structs: no
     join, no state, no shuffle. ``query_rows`` is [(query_id, vector)].
     Returns (query_id, corpus_id, approx_dist) for every streamed row,
@@ -752,10 +751,7 @@ def semdedup_stream_index(
     cents); cents is the KB-sized literal list that rides into the
     stream's narrow assignment map — the "centroids broadcast" half of
     the serving posture."""
-    from cloudtrace_exporter_spark.operators.similarity import (
-        _as_double,
-        _scaled_kmeans,
-    )
+    from cloudtrace_exporter_spark.operators.similarity import _scaled_kmeans
     from cloudtrace_exporter_spark.session import cache_once
 
     assigned, cents = _scaled_kmeans(
@@ -817,11 +813,11 @@ def stream_semdedup(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from cloudtrace_exporter_spark.operators.similarity import (
-        _as_double,
         _nearest_scaled,
+        _quantize,
     )
 
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
     self_dot = F.aggregate(
         F.zip_with("v", "v", lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -1267,13 +1263,13 @@ def stream_semantic_contamination(
     exact schema.
     """
     from cloudtrace_exporter_spark.operators.similarity import (
-        _as_double,
         _contam_verdicts,
         _nearest_scaled,
+        _quantize,
         _self_dot_long,
     )
 
-    qvec = F.transform(_as_double(vec_col), lambda x: F.round(x * scale).cast("long"))
+    qvec = _quantize(vec_col, scale)
 
     def _fn(batch_df: DataFrame, batch_id: int) -> None:
         corp = (

@@ -210,7 +210,9 @@ def test_bpe_local_batched_matches_distributed(spark):
 
 
 def test_containment_kernel_matches_expression(spark):
-    # kernel == JVM expression, bit-identical, on an adversarial slice:
+    # kernel == JVM expression (the exact theta join containment_pairs,
+    # which verifies with _containment_verify), bit-identical, on an
+    # adversarial slice:
     # shared vocab (dense candidates), an engulfed doc, an exact tie in
     # sizes (id tiebreak), a doc with no overlap, and repeated tokens
     # (array_distinct upstream must make sides set-like)
@@ -236,11 +238,7 @@ def test_containment_kernel_matches_expression(spark):
                 docs, threshold=thr, _cache=False, bitset_vocab=0
             )
         )
-        slow = _rows(
-            dd.containment_pairs_blocked(
-                docs, threshold=thr, _cache=False, bitset_vocab=0, _kernel=False
-            )
-        )
+        slow = _rows(dd.containment_pairs(docs, threshold=thr))
         assert bitset == kernel == slow
     assert len(bitset) > 0
 

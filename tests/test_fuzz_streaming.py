@@ -855,12 +855,11 @@ def test_sfz2_ivf_assign_and_pq_serving(spark, stream_fuzz_root, seed):
     )
 
     batch, stream = _emb_stream(spark, stream_fuzz_root, seed)
-    assigned, centroids = similarity.build_ivf_index(batch, n_centroids=4)
-    cent_rows = centroids.collect()
-    out = _drain(spark, stream_assign_cells(stream, cent_rows))
-    assert _rowset(out, ["id", "cell"]) == _rowset(
-        stream_assign_cells(batch, cent_rows), ["id", "cell"]
+    assigned, cents = similarity._scaled_kmeans(
+        batch, n_centroids=4, lloyd_iters=2, scale=10**6
     )
+    out = _drain(spark, stream_assign_cells(stream, cents, scale=10**6))
+    assert _rowset(out, ["id", "cell"]) == _rowset(assigned, ["id", "cell"])
     books = similarity.pq_train(batch, m=8, k=4, lloyd_iters=1)
     out_codes = _drain(spark, stream_pq_encode(stream, books))
     s_codes = {(r.id, tuple(r.codes)) for r in out_codes.collect()}

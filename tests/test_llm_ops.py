@@ -2325,28 +2325,6 @@ def test_source_novelty_separates_unique_from_shared(spark):
     assert got["src_a"]["novelty"] > 0.5
 
 
-def test_ivf_scaled_tracks_float_ivf(spark, sf_dir):
-    from cloudtrace_exporter_spark.operators import similarity
-    from cloudtrace_exporter_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    flt = {
-        (r["query_id"], r["corpus_id"])
-        for r in similarity.ivf_topk(emb, q, k=5, n_centroids=8, n_probe=4).collect()
-    }
-    scl = {
-        (r["query_id"], r["corpus_id"])
-        for r in similarity.ivf_topk_scaled(
-            emb, q, k=5, n_centroids=8, n_probe=4
-        ).collect()
-    }
-    # 1e-6 quantization only perturbs genuine micro-ties: the two paths
-    # must agree on (almost) the whole top-k set
-    assert len(flt & scl) / len(flt | scl) > 0.9
-
-
 def test_pq_scaled_tracks_float_pq(spark, sf_dir):
     from cloudtrace_exporter_spark.operators import similarity
     from cloudtrace_exporter_spark.sources.tables import load_table

@@ -259,6 +259,37 @@ def test_lsh_topk_single_data_exchange(spark, sf_dir):
         assert _data_shuffles(p) <= 1, q
 
 
+def test_strip_skips_materialized_cache_sections():
+    # a cache materialized while the query is built prints its
+    # AdaptiveSparkPlan as "== Final Plan ==" / "== Initial Plan =="
+    # sections LEFT of the InMemoryRelation that owns them; their
+    # exchanges ran once at materialization and must not count per query
+    from tools.plan_audit import _strip_cached_subplans
+
+    plan = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=false",
+        "+- BroadcastHashJoin [t#1], [t#2], Inner, BuildRight, false",
+        "   :- InMemoryTableScan [id#6L, t#1]",
+        "   :     +- InMemoryRelation [id#6L, t#1], StorageLevel(disk, memory, 1 replicas)",
+        "   :           +- AdaptiveSparkPlan isFinalPlan=true",
+        "      +- == Final Plan ==",
+        "         ResultQueryStage 1",
+        "         +- ShuffleQueryStage 0",
+        "            +- Exchange hashpartitioning(t#1, 8), ENSURE_REQUIREMENTS, [plan_id=9]",
+        "               +- Scan ExistingRDD[id#6L,t#1]",
+        "      +- == Initial Plan ==",
+        "         Exchange hashpartitioning(t#1, 8), ENSURE_REQUIREMENTS, [plan_id=5]",
+        "         +- Scan ExistingRDD[id#6L,t#1]",
+        "   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, string, false]),false)",
+        "      +- Exchange hashpartitioning(t#2, 8), ENSURE_REQUIREMENTS, [plan_id=8]",
+        "         +- Scan ExistingRDD[t#2]",
+    ])
+    p, n_cached = _strip_cached_subplans(plan)
+    assert n_cached == 1
+    assert _data_shuffles(p) == 1 and p.count("BroadcastExchange") == 1
+    assert "Scan ExistingRDD[t#2]" in p and "plan_id=5" not in p
+
+
 def test_dsir_profile_merge_is_not_sort_merge(plans):
     # the two ≤256-row profiles merge by union+re-aggregate; a full-outer
     # SortMergeJoin here would re-introduce an exchange pair on KB inputs

@@ -6,6 +6,7 @@ exact brute force).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cloudtrace_exporter_spark.operators import analytics, layout, similarity, skew
@@ -117,12 +118,14 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
 
 def test_ivf_cells_partition_corpus(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids = similarity.build_ivf_index(emb, n_centroids=8)
-    assert centroids.count() == 8
+    assigned, cents = similarity._scaled_kmeans(
+        emb, n_centroids=8, lloyd_iters=2, scale=10**6
+    )
+    assert len(cents) == 8
     assert assigned.count() == emb.count()
     assert assigned.select("cell").distinct().count() <= 8
     dim = len(emb.first()["embedding"])
-    assert all(len(r["centroid"]) == dim for r in centroids.collect())
+    assert all(len(c) == dim for _, c in cents)
 
 
 def test_ivf_recall_vs_exact(spark, sf_dir):
@@ -131,7 +134,7 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
     exact = {(r["query_id"], r["corpus_id"]) for r in similarity.cosine_topk(emb, q, k=5).collect()}
     approx = {
         (r["query_id"], r["corpus_id"])
-        for r in similarity.ivf_topk(emb, q, k=5, n_centroids=8, n_probe=4).collect()
+        for r in similarity.ivf_topk_scaled(emb, q, k=5, n_centroids=8, n_probe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     # measured 0.94 at n_probe=4/8 on the 64-dim fixture (verdict r1 #7)
@@ -145,7 +148,7 @@ def test_ivf_full_probe_equals_exact(spark, sf_dir):
     exact = {(r["query_id"], r["corpus_id"], r["rnk"]) for r in similarity.cosine_topk(emb, q, k=3).collect()}
     full = {
         (r["query_id"], r["corpus_id"], r["rnk"])
-        for r in similarity.ivf_topk(emb, q, k=3, n_centroids=4, n_probe=4).collect()
+        for r in similarity.ivf_topk_scaled(emb, q, k=3, n_centroids=4, n_probe=4).collect()
     }
     assert exact == full
 
@@ -260,15 +263,37 @@ def test_ivf_index_roundtrip_serves_identical_results(spark, sf_dir, tmp_path):
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    idx = similarity.build_ivf_index(emb, n_centroids=8)
+    assigned, cents = similarity._scaled_kmeans(
+        emb, n_centroids=8, lloyd_iters=2, scale=10**6
+    )
     path = str(tmp_path / "ivf")
-    similarity.save_ivf_index(*idx, path)
-    loaded = similarity.load_ivf_index(spark, path)
+    similarity.save_ivf_index(assigned, cents, 10**6, path)
+    l_assigned, l_cents, l_scale = similarity.load_ivf_index(spark, path)
+    assert l_cents == cents and l_scale == 10**6
 
-    fresh = similarity.ivf_topk(emb, q, k=3, index=idx).collect()
-    served = similarity.ivf_topk(emb, q, k=3, index=loaded).collect()
+    fresh = similarity._ivf_probe_scaled(
+        assigned, q, cents, k=3, n_probe=4, scale=10**6
+    ).collect()
+    served = similarity._ivf_probe_scaled(
+        l_assigned, q, l_cents, k=3, n_probe=4, scale=l_scale
+    ).collect()
     assert sorted(map(tuple, fresh)) == sorted(map(tuple, served))
     assert any(d.startswith("cell=") for d in os.listdir(f"{path}/assigned"))
+
+
+def test_load_ivf_index_rejects_float_centroids(spark, tmp_path):
+    # an index at rest from the float k-means holds array<double>
+    # centroids that no integer probe can rank: loading it must fail
+    # loudly, naming the path, instead of scoring against wrong cells
+    path = str(tmp_path / "old_ivf")
+    spark.createDataFrame(
+        [(1, [0.5, 0.25], 1)], "id long, v array<double>, cell int"
+    ).write.partitionBy("cell").parquet(f"{path}/assigned")
+    spark.createDataFrame(
+        [(1, [0.5, 0.25])], "cell int, centroid array<double>"
+    ).write.parquet(f"{path}/centroids")
+    with pytest.raises(ValueError, match="old_ivf"):
+        similarity.load_ivf_index(spark, path)
 
 
 # --------------------------------------------------------------------------

@@ -437,15 +437,16 @@ def test_streaming_ivf_assignment_matches_batch(spark, tmp_path):
     src = str(tmp_path / "emb_src")
     emb.coalesce(2).write.mode("overwrite").parquet(src)
 
-    assigned, centroids = similarity.build_ivf_index(emb, n_centroids=8)
-    cent_rows = centroids.collect()
+    assigned, cents = similarity._scaled_kmeans(
+        emb, n_centroids=8, lloyd_iters=2, scale=10**6
+    )
     stream = (
         spark.readStream.schema(FIXTURE_SCHEMAS["embeddings"])
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     out = _run_to_memory(
-        spark, stream_assign_cells(stream, cent_rows), "t_ivf_assign"
+        spark, stream_assign_cells(stream, cents, scale=10**6), "t_ivf_assign"
     )
     s = {(r["id"], r["cell"]) for r in out.select("id", "cell").collect()}
     b = {(r["id"], r["cell"]) for r in assigned.select("id", "cell").collect()}
@@ -488,7 +489,7 @@ def test_streaming_pq_adc_matches_batch(spark, tmp_path):
     """PQ serving from a stream: codes and ADC distances computed by the
     literal-codebook narrow map over a file stream must equal the batch
     pq_encode / pq_topk results row-for-row (the driver-side query tables
-    replay _sq_dist's left-fold, so the doubles are bit-identical)."""
+    replay pq_topk's left-fold, so the doubles are bit-identical)."""
     from cloudtrace_exporter_spark.operators import similarity
     from cloudtrace_exporter_spark.schemas import FIXTURE_SCHEMAS
     from cloudtrace_exporter_spark.streaming.pipeline import stream_adc_scores, stream_pq_encode

@@ -380,7 +380,6 @@ def test_registry_consistency():
     rows_only = set(q) - set(o)
     documented = {
         "q_approx_count_distinct", "q_approx_percentiles", "q_hll_rollup",
-        "q_ivf_topk",
         "q_multimodal_audio", "q_multimodal_decode", "q_multimodal_features",
         "q_pagerank", "q_pq_rerank", "q_pq_topk", "q_simhash_near_dup",
         "q_winnow_dedup", "q_phash_dedup", "q_audio_fingerprint_dedup",

@@ -17,6 +17,58 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 
+_SECTION_HEADERS = ("== Final Plan ==", "== Initial Plan ==", "== Current Plan ==")
+
+
+def _col(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _skip_tree(lines: list[str], i: int, floor: int, prev: int, bare: int = 0) -> int:
+    """Index of the first line at or after ``i`` outside the tree being
+    skipped: a blank line, a section header, a line at column <=
+    ``floor``, a line more than two levels right of the line before it
+    (a child prints 3 columns right of its parent, an inner child such
+    as a cached plan 6), or — inside a section (see _skip_sections),
+    whose lines carry no prefix of the enclosing tree — a line with a
+    tree mark left of column ``bare``."""
+    while i < len(lines):
+        s = lines[i].lstrip(" :+-")
+        col = len(lines[i]) - len(s)
+        if (
+            not s
+            or s.startswith(_SECTION_HEADERS)
+            or col <= floor
+            or col > prev + 6
+            or lines[i][:bare].strip()
+        ):
+            return i
+        prev, i = col, i + 1
+        if s.startswith("AdaptiveSparkPlan") and i < len(lines):
+            if lines[i].lstrip(" :+-").startswith(_SECTION_HEADERS):
+                # its plan prints in the sections, so it has no child
+                # lines: the tree resumes at its own column or left of it
+                i, prev = _skip_sections(lines, i), col - 6
+    return i
+
+
+def _skip_sections(lines: list[str], i: int) -> int:
+    """Skip the ``== Final Plan ==`` / ``== Initial Plan ==`` sections an
+    executed AdaptiveSparkPlan prints. Spark indents each section by the
+    AdaptiveSparkPlan's depth in its own sub-plan, not under the
+    enclosing tree, so a materialized cache's sections can sit LEFT of
+    the InMemoryRelation that owns them; each section is its header and
+    one tree whose root starts at the header's column; the Initial Plan
+    section comes last."""
+    while i < len(lines) and lines[i].lstrip(" :+-").startswith(_SECTION_HEADERS):
+        last = lines[i].lstrip(" :+-").startswith("== Initial Plan ==")
+        h = _col(lines[i])
+        i = _skip_tree(lines, i + 2, h, h, bare=h)  # header, root at column h
+        if last:
+            break
+    return i
+
+
 def _strip_cached_subplans(plan: str) -> tuple[str, int]:
     """Drop the build plans printed inline under InMemoryRelation nodes.
 
@@ -26,21 +78,18 @@ def _strip_cached_subplans(plan: str) -> tuple[str, int]:
     any plan that reuses a cached index (LSH signatures, as-of carry
     maps). Returns (stripped plan text, number of InMemoryRelations).
     """
+    lines = plan.splitlines()
     out = []
     n_cached = 0
-    skip_deeper_than: int | None = None
-    for ln in plan.splitlines():
-        stripped = ln.lstrip(" :+-")
-        depth = len(ln) - len(stripped)
-        if skip_deeper_than is not None:
-            if stripped and depth > skip_deeper_than:
-                continue
-            skip_deeper_than = None
-        if stripped.startswith("InMemoryRelation"):
+    i = 0
+    while i < len(lines):
+        ln = lines[i]
+        if ln.lstrip(" :+-").startswith("InMemoryRelation"):
             n_cached += 1
-            skip_deeper_than = depth
+            i = _skip_tree(lines, i + 1, _col(ln), _col(ln))
             continue
         out.append(ln)
+        i += 1
     return "\n".join(out), n_cached
 
 
