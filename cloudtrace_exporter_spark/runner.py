@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cloudtrace_exporter_spark.config import EngineConfig
 from cloudtrace_exporter_spark.operators import normalize
+from cloudtrace_exporter_spark.session import right_sized
 from cloudtrace_exporter_spark.sources import cts_pages
 from cloudtrace_exporter_spark.streaming.cypher_sink import foreach_batch_cypher_upsert
 from cloudtrace_exporter_spark.streaming.pipeline import dedup_within_watermark
@@ -107,12 +108,15 @@ def run_pipeline(
     cypher_sink = foreach_batch_cypher_upsert(f"{target}/cypher", counters=counters["cypher"])
 
     def _both(batch_df: DataFrame, epoch_id: int) -> None:
-        # Pinned so the stateful dedup plan runs once, not once per sink action;
-        # released blocking, so no block removal overlaps the next batch.
+        # Pinned so the stateful dedup plan runs once, on every partition,
+        # not once per sink action; the sinks read a right-sized view of the
+        # pin. Released blocking, so no block removal overlaps the next batch.
         batch_df.persist()
         try:
-            graph_sink(batch_df, epoch_id)
-            cypher_sink(batch_df, epoch_id)
+            batch_df.count()
+            view = right_sized(batch_df)
+            graph_sink(view, epoch_id)
+            cypher_sink(view, epoch_id)
         finally:
             batch_df.unpersist(blocking=True)
 

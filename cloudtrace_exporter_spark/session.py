@@ -204,6 +204,19 @@ def rdd_partitions(df: DataFrame) -> int:
     return artifact(df.sparkSession, name, None, lambda: df.rdd.getNumPartitions())
 
 
+def _cached_entry(df: DataFrame):
+    """The CacheManager's ``CachedData`` for ``df``'s plan, or None when
+    the plan is not cached. The JVM lookup is Dataset-based
+    (`cacheManager().lookupCachedData`); if the private API moves this
+    also returns None."""
+    try:
+        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+        entry = cm.lookupCachedData(df._jdf)
+        return entry.get() if entry.isDefined() else None
+    except Exception:
+        return None
+
+
 def cache_once(df: DataFrame) -> DataFrame:
     """``df.cache()`` with ONE caching owner per logical plan: if an
     identical plan is already in the CacheManager (e.g. a helper cached
@@ -212,15 +225,31 @@ def cache_once(df: DataFrame) -> DataFrame:
 
     Spark's CacheManager already dedups identical plans, so the
     re-``cache()`` was harmless — but it WARNs (`Asked to cache already
-    cached data`), polluting the logs the plan audits read. The JVM
-    lookup is Dataset-based (`cacheManager().lookupCachedData`); if the
-    private API moves, fall back to plain ``cache()`` — correctness
+    cached data`), polluting the logs the plan audits read. Correctness
     never depends on this helper.
     """
+    return df if _cached_entry(df) is not None else df.cache()
+
+
+def right_sized(df: DataFrame) -> DataFrame:
+    """A ``coalesce(k)`` view of a cached, materialized ``df``, where k is
+    its cached bytes over ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    (rounded up): the size AQE aims a shuffle partition at. A batch that
+    fits one such partition then plans each ``dropDuplicates`` with no
+    exchange and writes one file. ``df`` itself is returned when k would
+    not cut its partition count, or when it is not cached."""
+    entry = _cached_entry(df)
+    if entry is None:
+        return df
+    spark = df.sparkSession
     try:
-        cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
-        if cm.lookupCachedData(df._jdf).isDefined():
-            return df
+        sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+        advisory = spark._jsparkSession.sessionState().conf().getConf(
+            sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+        )
+        relation = entry.cachedRepresentation()
+        k = max(1, -(-relation.computeStats().sizeInBytes() // advisory))
+        n = relation.cacheBuilder().cachedColumnBuffers().getNumPartitions()
     except Exception:
-        pass
-    return df.cache()
+        return df
+    return df.coalesce(k) if k < n else df

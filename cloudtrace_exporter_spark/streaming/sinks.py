@@ -18,12 +18,15 @@ import json
 import os
 import threading
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from cloudtrace_exporter_spark.operators.graph import build_graph
-from cloudtrace_exporter_spark.schemas import EDGE_ENDPOINTS, NODE_KEYS
+from cloudtrace_exporter_spark.schemas import NODE_KEYS
 
 
 @dataclass
@@ -61,9 +64,33 @@ def foreach_batch_graph_upsert(
     ``UNWIND $rows MERGE ...`` Cypher instead (out-of-process, per
     BASELINE.json: "Neo4j graph writes are external").
 
+    The 11 table upserts are small jobs, so their planning and scheduling
+    are what a tick pays for:
+
+    - ``runner.run_pipeline`` hands this sink a right-sized view of its
+      pinned batch (``session.right_sized``). A batch under one advisory
+      partition is a single partition, so every table's
+      ``dropDuplicates`` plans with no exchange and each table gains one
+      file per batch.
+    - The store is read with the key columns' schema taken from the
+      delta frame, so no schema-inference job runs per table.
+    - The upserts run concurrently, ``min(11, defaultParallelism)`` at a
+      time. Each thread inherits the caller's local properties, so the
+      jobs carry the streaming query's job group and ``stop()`` cancels
+      them. The sink returns once every write has finished.
+
     An empty batch (the watermark's no-data batch) is counted as one
-    batch with nothing delivered and writes no table.
+    batch with nothing delivered and writes no table. A failed batch is
+    counted once, with an error naming the epoch and each failed table,
+    when counters are attached, and re-raised otherwise.
     """
+
+    def _upsert(df: DataFrame, path: str, key_cols: list[str]) -> None:
+        if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
+            key_schema = StructType([df.schema[c] for c in key_cols])
+            existing = df.sparkSession.read.schema(key_schema).parquet(path)
+            df = df.join(existing, on=key_cols, how="left_anti")
+        df.write.mode("append").parquet(path)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -74,21 +101,20 @@ def foreach_batch_graph_upsert(
                     counters.record(delivered=0)
                 return
             nodes, edges = build_graph(batch_df)
-            for kind, tables, keys in (
-                ("nodes", nodes, NODE_KEYS),
-                ("edges", edges, {k: None for k in EDGE_ENDPOINTS}),
-            ):
-                for name, df in tables.items():
-                    path = os.path.join(out_dir, kind, name)
-                    if os.path.isdir(path) and any(
-                        f.endswith(".parquet") for f in os.listdir(path)
-                    ):
-                        existing = spark.read.parquet(path)
-                        key_cols = (
-                            keys[name] if kind == "nodes" and keys.get(name) else df.columns
-                        )
-                        df = df.join(existing, on=list(key_cols), how="left_anti")
-                    df.write.mode("append").parquet(path)
+            tables = {f"nodes/{name}": (df, NODE_KEYS[name]) for name, df in nodes.items()}
+            tables.update({f"edges/{name}": (df, df.columns) for name, df in edges.items()})
+            upsert = inheritable_thread_target(spark)(_upsert)
+            width = min(len(tables), spark.sparkContext.defaultParallelism)
+            with ThreadPoolExecutor(max_workers=width) as pool:
+                writes = {
+                    table: pool.submit(upsert, df, os.path.join(out_dir, table), keys)
+                    for table, (df, keys) in tables.items()
+                }
+            failed = {t: exc for t, w in writes.items() if (exc := w.exception())}
+            if failed:
+                raise RuntimeError(
+                    "; ".join(f"{t}: {exc}" for t, exc in failed.items())
+                ) from next(iter(failed.values()))
             if counters:
                 counters.record(delivered=n_in)
         except Exception as exc:  # per-batch failure tolerated + counted (A13)
@@ -183,7 +209,7 @@ def foreach_batch_quality_gated(
                 if counters:
                     counters.record(delivered=total)
         finally:
-            batch_df.unpersist()
+            batch_df.unpersist(blocking=True)
 
     return _sink
 

@@ -15,6 +15,7 @@ import pytest
 from cloudtrace_exporter_spark import runner
 from cloudtrace_exporter_spark.config import EngineConfig
 from cloudtrace_exporter_spark.operators import normalize
+from cloudtrace_exporter_spark.schemas import EDGE_ENDPOINTS, NODE_KEYS
 from cloudtrace_exporter_spark.sources import cts_pages
 from cloudtrace_exporter_spark.sources.tables import load_table
 
@@ -67,8 +68,6 @@ def _graph_rows(tables):
 
     from pyspark.sql import functions as F
 
-    from cloudtrace_exporter_spark.schemas import NODE_KEYS
-
     parts = []
     for (kind, name), df in tables.items():
         row = F.to_json(F.struct(*sorted(df.columns)))
@@ -102,6 +101,15 @@ def test_stream_ticks_upsert_store_once_per_event(spark, tmp_path):
     cfg = EngineConfig(streams=True, forward=True, from_minutes=1440)
     out = str(tmp_path / "out")
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    tables = [f"nodes/{n}" for n in NODE_KEYS] + [f"edges/{n}" for n in EDGE_ENDPOINTS]
+
+    def n_files(rel_dir, pred):
+        path = f"{out}/{rel_dir}"
+        return sum(map(pred, os.listdir(path))) if os.path.isdir(path) else 0
+
+    def store_files():
+        return {t: n_files(f"graph/{t}", lambda f: f.endswith(".parquet")) for t in tables}
+
     delivered = []
     for k, window in windows.items():
         staged = str(tmp_path / f"w{k}")
@@ -109,12 +117,19 @@ def test_stream_ticks_upsert_store_once_per_event(spark, tmp_path):
         for f in os.listdir(staged):
             if f.endswith(".json"):
                 os.rename(os.path.join(staged, f), os.path.join(landing, f"w{k}-{f}"))
+        files_before = store_files()
+        epochs_before = n_files("cypher", lambda f: f.startswith("rows-"))
         _, counters = runner.run_pipeline(
             spark, cfg, CTX, landing, graph_dir=out, checkpoint=str(tmp_path / "ckpt")
         )
         delivered.append({name: c.delivered for name, c in counters.items()})
         assert counters["graph"].failed == counters["cypher"].failed == 0
         assert counters["cypher"].batches > 1  # the watermark's no-data batch ran
+        # a data epoch (one Cypher rows-<epoch> directory each) adds at most
+        # one parquet file to each of the 11 tables
+        data_epochs = n_files("cypher", lambda f: f.startswith("rows-")) - epochs_before
+        for table, n in store_files().items():
+            assert n - files_before[table] <= data_epochs, table
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
     events = runner.build_events(spark, EngineConfig(streams=False), CTX, landing)

@@ -300,6 +300,64 @@ def test_sink_failure_is_counted_not_raised(spark, staged_events, tmp_path):
     assert "sink down" in counters.errors[0]
 
 
+def _one_event_batch(spark):
+    from cloudtrace_exporter_spark.schemas import EVENT_SCHEMA
+
+    return spark.createDataFrame(
+        [("e1", "src", "t", "alice", None, "ok", "200", "r1", "eu-de", "d1", "p1", "{}")],
+        EVENT_SCHEMA,
+    )
+
+
+def test_graph_sink_failed_table_is_counted_once_or_raised(spark, tmp_path):
+    """One table path that is a regular file fails that table's write: with
+    counters the epoch is counted failed once, naming the epoch and the
+    table, and the sink returns only after every other write finished;
+    without counters it raises."""
+    batch = _one_event_batch(spark)
+    out_dir = tmp_path / "graph"
+    (out_dir / "nodes").mkdir(parents=True)
+    (out_dir / "nodes" / "regions").write_text("")
+    counters = DeliveryCounters()
+    foreach_batch_graph_upsert(str(out_dir), counters)(batch, 3)
+    assert (counters.delivered, counters.failed) == (0, 1)
+    assert counters.errors[0].startswith("epoch 3: nodes/regions: ")
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert spark.read.parquet(str(out_dir / "nodes" / "actions")).count() == 1
+    with pytest.raises(Exception, match="nodes/regions"):
+        foreach_batch_graph_upsert(str(out_dir))(batch, 4)
+
+
+def test_graph_sink_jobs_inherit_caller_job_group(spark, tmp_path):
+    """The table writes run on pool threads, yet every job carries the
+    calling thread's job group, which is what lets a streaming query's
+    ``stop()`` cancel them."""
+    import threading
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    batch = _one_event_batch(spark)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    errors = []
+
+    def call():
+        sc.setJobGroup("g", "graph sink job group", interruptOnCancel=True)
+        try:
+            foreach_batch_graph_upsert(str(tmp_path / "graph"))(batch, 0)
+        except Exception as exc:
+            errors.append(exc)
+        finally:
+            sc._jsc.clearJobGroup()
+
+    t = threading.Thread(target=call)
+    t.start()
+    t.join()
+    assert errors == []
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup("g")) >= 1 + 11  # the count + 11 table writes
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
 def test_cypher_sink_writes_replayable_unwind_script(spark, staged_events, tmp_path):
     """Batched Cypher sink (set-oriented neo4j_sink replacement): the
     UNWIND MERGE template + per-epoch JSON parameter rows, delivered
