@@ -23,64 +23,60 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloudtrace_exporter_spark.schemas import NODE_KEYS
+
+# Every node and edge table of the MERGE template as (column, event
+# column) pairs. A node's MERGE key is its NODE_KEYS prefix; an edge's is
+# its whole row. build_nodes/build_edges, GRAPH_TABLE_KEYS and the
+# streaming sink's single anti-join all read these two maps.
+NODE_COLUMNS: dict[str, tuple[tuple[str, str], ...]] = {
+    # MERGE (region:REGION{name:$region})            client.go:10
+    "regions": (("name", "region"),),
+    # MERGE (status:STATUS{id:$status})               client.go:11
+    "statuses": (("id", "status"),),
+    # MERGE (subject:SUBJECT{id:$subject})            client.go:12
+    "subjects": (("id", "subject"),),
+    # MERGE (tenant:TENANT{tenantId,domainId})        client.go:13 (composite key)
+    "tenants": (("tenant_id", "tenant"), ("domain_id", "domain")),
+    # MERGE (resource:RESOURCE{id:$resourceId})       client.go:14
+    "resources": (("id", "resource_id"),),
+    # MERGE (action:ACTION{id,timestamp,source,type}) client.go:15
+    "actions": (("id", "event_id"), ("timestamp", "event_time"), ("source", "source"), ("type", "type")),
+}
+
+# The Cypher states APPLIED_ON twice (client.go:15 and :18) — redundant
+# but MERGE-idempotent; here it is naturally a single dedup'd edge set.
+# The composite tenant key is carried as two columns.
+EDGE_COLUMNS: dict[str, tuple[tuple[str, str], ...]] = {
+    # ACTION-[:APPLIED_ON]->RESOURCE                  client.go:15,18
+    "applied_on": (("src", "event_id"), ("dst", "resource_id")),
+    # TENANT-[:LOCATED_AT]->REGION                    client.go:16
+    "located_at": (("src", "tenant"), ("src_domain", "domain"), ("dst", "region")),
+    # RESOURCE-[:MEMBER_OF]->TENANT                   client.go:17
+    "member_of": (("src", "resource_id"), ("dst", "tenant"), ("dst_domain", "domain")),
+    # ACTION-[:WITH_STATUS]->STATUS                   client.go:19
+    "with_status": (("src", "event_id"), ("dst", "status")),
+    # ACTION-[:PERFORMED_BY]->SUBJECT                 client.go:20
+    "performed_by": (("src", "event_id"), ("dst", "subject")),
+}
+
+
+def _project(events: DataFrame, cols: tuple[tuple[str, str], ...], keys: list[str]) -> DataFrame:
+    """``cols`` selected from an EVENT_SCHEMA frame, dedup'd on ``keys``."""
+    return events.select(
+        *[F.col(ev) if ev == name else F.col(ev).alias(name) for name, ev in cols]
+    ).dropDuplicates(keys)
+
 
 def build_nodes(events: DataFrame) -> dict[str, DataFrame]:
     """EVENT_SCHEMA frame → the 6 node tables (client.go:10-15), dedup'd by key."""
-    return {
-        # MERGE (region:REGION{name:$region})            client.go:10
-        "regions": events.select(F.col("region").alias("name")).dropDuplicates(["name"]),
-        # MERGE (status:STATUS{id:$status})               client.go:11
-        "statuses": events.select(F.col("status").alias("id")).dropDuplicates(["id"]),
-        # MERGE (subject:SUBJECT{id:$subject})            client.go:12
-        "subjects": events.select(F.col("subject").alias("id")).dropDuplicates(["id"]),
-        # MERGE (tenant:TENANT{tenantId,domainId})        client.go:13 (composite key)
-        "tenants": events.select(
-            F.col("tenant").alias("tenant_id"), F.col("domain").alias("domain_id")
-        ).dropDuplicates(["tenant_id", "domain_id"]),
-        # MERGE (resource:RESOURCE{id:$resourceId})       client.go:14
-        "resources": events.select(F.col("resource_id").alias("id")).dropDuplicates(["id"]),
-        # MERGE (action:ACTION{id,timestamp,source,type}) client.go:15
-        "actions": events.select(
-            F.col("event_id").alias("id"),
-            F.col("event_time").alias("timestamp"),
-            "source",
-            "type",
-        ).dropDuplicates(["id"]),
-    }
+    return {name: _project(events, cols, NODE_KEYS[name]) for name, cols in NODE_COLUMNS.items()}
 
 
 def build_edges(events: DataFrame) -> dict[str, DataFrame]:
-    """EVENT_SCHEMA frame → the 5 edge tables (client.go:15-20), dedup'd.
-
-    The Cypher states APPLIED_ON twice (client.go:15 and :18) — redundant
-    but MERGE-idempotent; here it is naturally a single dedup'd edge set.
-    Composite tenant key is carried as two columns.
-    """
+    """EVENT_SCHEMA frame → the 5 edge tables (client.go:15-20), dedup'd."""
     return {
-        # ACTION-[:APPLIED_ON]->RESOURCE                  client.go:15,18
-        "applied_on": events.select(
-            F.col("event_id").alias("src"), F.col("resource_id").alias("dst")
-        ).dropDuplicates(["src", "dst"]),
-        # TENANT-[:LOCATED_AT]->REGION                    client.go:16
-        "located_at": events.select(
-            F.col("tenant").alias("src"),
-            F.col("domain").alias("src_domain"),
-            F.col("region").alias("dst"),
-        ).dropDuplicates(["src", "src_domain", "dst"]),
-        # RESOURCE-[:MEMBER_OF]->TENANT                   client.go:17
-        "member_of": events.select(
-            F.col("resource_id").alias("src"),
-            F.col("tenant").alias("dst"),
-            F.col("domain").alias("dst_domain"),
-        ).dropDuplicates(["src", "dst", "dst_domain"]),
-        # ACTION-[:WITH_STATUS]->STATUS                   client.go:19
-        "with_status": events.select(
-            F.col("event_id").alias("src"), F.col("status").alias("dst")
-        ).dropDuplicates(["src", "dst"]),
-        # ACTION-[:PERFORMED_BY]->SUBJECT                 client.go:20
-        "performed_by": events.select(
-            F.col("event_id").alias("src"), F.col("subject").alias("dst")
-        ).dropDuplicates(["src", "dst"]),
+        name: _project(events, cols, [c for c, _ in cols]) for name, cols in EDGE_COLUMNS.items()
     }
 
 
@@ -92,19 +88,83 @@ def build_graph(events: DataFrame) -> tuple[dict[str, DataFrame], dict[str, Data
 # MERGE key of every node/edge table (client.go:10-21), in output order.
 # Keys are column tuples of the NORMALIZED event frame, not of the built
 # tables — that is what lets the summary below run off one scan.
-GRAPH_TABLE_KEYS: dict[str, tuple[str, ...]] = {
-    "edge:applied_on": ("event_id", "resource_id"),
-    "edge:located_at": ("tenant", "domain", "region"),
-    "edge:member_of": ("resource_id", "tenant", "domain"),
-    "edge:performed_by": ("event_id", "subject"),
-    "edge:with_status": ("event_id", "status"),
-    "node:actions": ("event_id",),
-    "node:regions": ("region",),
-    "node:resources": ("resource_id",),
-    "node:statuses": ("status",),
-    "node:subjects": ("subject",),
-    "node:tenants": ("tenant", "domain"),
+GRAPH_TABLE_KEYS: dict[str, tuple[str, ...]] = dict(
+    sorted(
+        [
+            (f"node:{n}", tuple(ev for _, ev in cols[: len(NODE_KEYS[n])]))
+            for n, cols in NODE_COLUMNS.items()
+        ]
+        + [(f"edge:{n}", tuple(ev for _, ev in cols)) for n, cols in EDGE_COLUMNS.items()]
+    )
+)
+
+#: Store path of every table ("nodes/regions") → (its columns, the length
+#: of its MERGE key, which leads the columns).
+GRAPH_TABLES: dict[str, tuple[tuple[tuple[str, str], ...], int]] = {
+    f"{kind}s/{name}": (cols, len(GRAPH_TABLE_KEYS[f"{kind}:{name}"]))
+    for kind, spec in (("node", NODE_COLUMNS), ("edge", EDGE_COLUMNS))
+    for name, cols in spec.items()
 }
+
+#: Key slots of the long graph frame. A table with a shorter key fills the
+#: rest with a constant, on the batch side and the store side alike.
+KEY_SLOTS = ("k1", "k2", "k3")
+
+
+def graph_rows(events: DataFrame) -> DataFrame:
+    """Every node and edge row of ``events`` as ONE long frame
+    ``(table, k1, k2, k3, <payload>)``, deduplicated once on
+    ``(table, k1, k2, k3)``.
+
+    ``table`` is the store path (``nodes/regions``), the key slots hold the
+    table's MERGE key and the payload holds the non-key columns (the
+    action's ``timestamp``, ``source`` and ``type``), null for every other
+    table. One scan and one dedup stand for the 11 of ``build_graph``;
+    ``table_rows`` turns a table's slice back into its own columns. A null
+    key is kept once per table, as ``dropDuplicates`` keeps it, and never
+    equals a stored key in an anti-join.
+    """
+    types = {f.name: f.dataType for f in events.schema}
+    payload = {name: ev for cols, n in GRAPH_TABLES.values() for name, ev in cols[n:]}
+    structs = []
+    for path, (cols, n) in GRAPH_TABLES.items():
+        keys = [F.col(ev) for _, ev in cols[:n]] + [F.lit("")] * (len(KEY_SLOTS) - n)
+        own = {name for name, _ in cols[n:]}
+        structs.append(
+            F.struct(
+                F.lit(path).alias("table"),
+                *[k.alias(slot) for k, slot in zip(keys, KEY_SLOTS)],
+                *[
+                    (F.col(ev) if name in own else F.lit(None).cast(types[ev])).alias(name)
+                    for name, ev in payload.items()
+                ],
+            )
+        )
+    return (
+        events.select(F.explode(F.array(*structs)).alias("r"))
+        .select("r.*")
+        .dropDuplicates(["table", *KEY_SLOTS])
+    )
+
+
+def table_rows(rows: DataFrame, path: str) -> DataFrame:
+    """One table's slice of a ``graph_rows`` frame, with the table's own
+    column names and types (those of ``build_graph``)."""
+    cols, n = GRAPH_TABLES[path]
+    return rows.filter(F.col("table") == path).select(
+        *[F.col(slot).alias(name) for (name, _), slot in zip(cols[:n], KEY_SLOTS)],
+        *[name for name, _ in cols[n:]],
+    )
+
+
+def table_keys(table: DataFrame, path: str) -> DataFrame:
+    """A stored table's MERGE keys in the ``graph_rows`` key shape
+    ``(table, k1, k2, k3)``, the other side of the batch's anti-join."""
+    cols, n = GRAPH_TABLES[path]
+    keys = [F.col(name) for name, _ in cols[:n]] + [F.lit("")] * (len(KEY_SLOTS) - n)
+    return table.select(
+        F.lit(path).alias("table"), *[k.alias(slot) for k, slot in zip(keys, KEY_SLOTS)]
+    )
 
 
 def summarize_graph(events: DataFrame) -> DataFrame:

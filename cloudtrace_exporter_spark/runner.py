@@ -17,13 +17,14 @@ rather than crash (the nil-event deref at adapter.go:187-195).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from cloudtrace_exporter_spark.config import EngineConfig
 from cloudtrace_exporter_spark.operators import normalize
-from cloudtrace_exporter_spark.session import right_sized
 from cloudtrace_exporter_spark.sources import cts_pages
 from cloudtrace_exporter_spark.streaming.cypher_sink import foreach_batch_cypher_upsert
 from cloudtrace_exporter_spark.streaming.pipeline import dedup_within_watermark
@@ -31,6 +32,9 @@ from cloudtrace_exporter_spark.streaming.sinks import (
     DeliveryCounters,
     foreach_batch_graph_upsert,
 )
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
 
 #: Auth-context fields the reference reads off its service client
 #: (adapter.go:224, 252-254) — engine-side they are plain config.
@@ -96,7 +100,15 @@ def run_pipeline(
     Streaming runs drain available input and stop (``availableNow`` —
     the test/driver cadence); pass ``available_now=False`` for the
     resident ``trigger(processingTime=cfg.trigger_interval)`` loop, the
-    A18 ticker equivalent.
+    A18 ticker equivalent. Either way a tick is one micro-batch: the query
+    starts with ``spark.sql.streaming.noDataMicroBatches.enabled=false``
+    (set on the session for ``start()`` only), so no watermark-only batch
+    follows the data batch. State the watermark expires is evicted by the
+    next tick's batch, which filters late rows by that same watermark, so
+    an evicted key is always late and state holds one more poll window.
+
+    Each batch is pinned and counted once; both sinks read its size from
+    the pin, and the Cypher write runs beside the graph writes.
     """
     events = build_events(spark, cfg, ctx, pages_dir)
     if not (cfg.forward and (cfg.sink or graph_dir)):
@@ -109,28 +121,43 @@ def run_pipeline(
 
     def _both(batch_df: DataFrame, epoch_id: int) -> None:
         # Pinned so the stateful dedup plan runs once, on every partition,
-        # not once per sink action; the sinks read a right-sized view of the
-        # pin. Released blocking, so no block removal overlaps the next batch.
+        # not once per sink action; both sinks read its size from the pin.
+        # The Cypher write runs beside the graph writes, on a thread that
+        # inherits the query's job group. The pin is released blocking, so
+        # no block removal overlaps the next batch.
         batch_df.persist()
         try:
             batch_df.count()
-            view = right_sized(batch_df)
-            graph_sink(view, epoch_id)
-            cypher_sink(view, epoch_id)
+            run = inheritable_thread_target(spark)(cypher_sink)
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                cypher = pool.submit(run, batch_df, epoch_id)
+                graph_sink(batch_df, epoch_id)
+            cypher.result()
         finally:
             batch_df.unpersist(blocking=True)
 
-    if cfg.streams:
-        if checkpoint is None:
-            raise ValueError("streaming delivery needs a checkpoint dir")
-        writer = events.writeStream.foreachBatch(_both).option(
-            "checkpointLocation", checkpoint
-        )
-        if available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            writer.trigger(processingTime=cfg.trigger_interval).start()
-    else:
+    if not cfg.streams:
         _both(events, 0)
+        return events, counters
+    if checkpoint is None:
+        raise ValueError("streaming delivery needs a checkpoint dir")
+    writer = events.writeStream.foreachBatch(_both).option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=cfg.trigger_interval)
+    # A tick is one micro-batch: no watermark-only batch follows it. The
+    # query clones the session conf when it starts, so it keeps the setting
+    # and the session gets its own value back.
+    prev = spark.conf.get(_NO_DATA_BATCHES, None)
+    spark.conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        q = writer.start()
+    finally:
+        if prev is None:
+            spark.conf.unset(_NO_DATA_BATCHES)
+        else:
+            spark.conf.set(_NO_DATA_BATCHES, prev)
+    if available_now:
+        q.awaitTermination()
     return events, counters

@@ -231,6 +231,22 @@ def cache_once(df: DataFrame) -> DataFrame:
     return df if _cached_entry(df) is not None else df.cache()
 
 
+def cached_rows(df: DataFrame) -> int | None:
+    """Row count of a cached ``df`` whose every partition is materialized,
+    read from the cache builder's row counter with no job; None when ``df``
+    is not cached or not yet fully materialized."""
+    entry = _cached_entry(df)
+    if entry is None:
+        return None
+    try:
+        builder = entry.cachedRepresentation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            return None
+        return int(builder.rowCountStats().value())
+    except Exception:
+        return None
+
+
 def right_sized(df: DataFrame) -> DataFrame:
     """A ``coalesce(k)`` view of a cached, materialized ``df``, where k is
     its cached bytes over ``spark.sql.adaptive.advisoryPartitionSizeInBytes``

@@ -37,6 +37,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cloudtrace_exporter_spark.session import cached_rows, right_sized
 from cloudtrace_exporter_spark.streaming.sinks import DeliveryCounters
 
 # Set-oriented re-expression of the reference's per-event MERGE template
@@ -138,8 +139,12 @@ def foreach_batch_cypher_upsert(
     With ``uri`` set (and the ``neo4j`` driver importable) rows go to the
     database from executors; otherwise a replayable UNWIND script + JSON
     parameter files land under ``out_dir``, one ``rows-<epoch>``
-    directory per non-empty epoch. An empty batch is counted as one batch
-    with nothing delivered and writes nothing. A failure is counted when
+    directory per non-empty epoch. ``delivered`` counts the batch's rows,
+    as the graph sink does; a batch that its caller has cached and
+    materialized is not counted again (its size is read from the cache),
+    and its rows are written from a ``session.right_sized`` view of it. An
+    empty batch is counted as one batch with nothing delivered and writes
+    nothing. A failure is counted when
     counters are attached (A13 accounting semantics,
     adapter.go:140-156) and re-raised otherwise, so the batch replays
     from the checkpoint."""
@@ -148,12 +153,14 @@ def foreach_batch_cypher_upsert(
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         try:
-            rows = events_to_cypher_rows(batch_df)
-            n = rows.count()
+            n = cached_rows(batch_df)
+            if n is None:
+                n = batch_df.count()
             if n == 0:
                 if counters:
                     counters.record(delivered=0)
                 return
+            rows = events_to_cypher_rows(right_sized(batch_df))
             if uri is not None:
                 rows.foreachPartition(
                     _neo4j_partition_writer(

@@ -20,13 +20,14 @@ import threading
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 from pyspark.util import inheritable_thread_target
 
-from cloudtrace_exporter_spark.operators.graph import build_graph
-from cloudtrace_exporter_spark.schemas import NODE_KEYS
+from cloudtrace_exporter_spark.operators import graph
+from cloudtrace_exporter_spark.session import cached_rows, right_sized
 
 
 @dataclass
@@ -52,64 +53,94 @@ class DeliveryCounters:
 def foreach_batch_graph_upsert(
     out_dir: str, counters: DeliveryCounters | None = None
 ) -> Callable[[DataFrame, int], None]:
-    """A14 as a streaming sink: per micro-batch, materialize the node/edge
-    tables and upsert them into a parquet "graph store" directory.
+    """A14 as a streaming sink: per micro-batch, upsert the batch's node
+    and edge tables into a parquet "graph store" directory, one table per
+    subdirectory (``nodes/regions``, ``edges/applied_on``, ...).
 
     Idempotency strategy (MERGE semantics without a transactional format):
-    each node/edge table is re-deduplicated against what's already on
-    disk via anti-join before append. On a cluster with Delta/Iceberg
-    this callback body becomes a single ``MERGE INTO`` per table — the
-    composition is the same; the jars just aren't in this image. With the
-    Neo4j Spark connector available, the same callback pushes batched
-    ``UNWIND $rows MERGE ...`` Cypher instead (out-of-process, per
-    BASELINE.json: "Neo4j graph writes are external").
+    the batch's rows are anti-joined against the keys already on disk
+    before they are appended. On a cluster with Delta/Iceberg this callback
+    body becomes a ``MERGE INTO`` per table — the composition is the same;
+    the jars just aren't in this image. With the Neo4j Spark connector
+    available, the same callback pushes batched ``UNWIND $rows MERGE ...``
+    Cypher instead (out-of-process, per BASELINE.json: "Neo4j graph writes
+    are external").
 
-    The 11 table upserts are small jobs, so their planning and scheduling
-    are what a tick pays for:
+    The whole graph is one set-oriented MERGE:
 
-    - ``runner.run_pipeline`` hands this sink a right-sized view of its
-      pinned batch (``session.right_sized``). A batch under one advisory
-      partition is a single partition, so every table's
-      ``dropDuplicates`` plans with no exchange and each table gains one
-      file per batch.
-    - The store is read with the key columns' schema taken from the
-      delta frame, so no schema-inference job runs per table.
-    - The upserts run concurrently, ``min(11, defaultParallelism)`` at a
-      time. Each thread inherits the caller's local properties, so the
-      jobs carry the streaming query's job group and ``stop()`` cancels
-      them. The sink returns once every write has finished.
+    - ``graph.graph_rows`` projects the batch once into a long frame of
+      ``(table, k1, k2, k3)`` plus the action payload and dedups it once.
+    - That frame is anti-joined once against the union of every stored
+      table's keys (``graph.table_keys``; each table is read with its key
+      columns' schema, so no schema-inference job runs) and the delta is
+      pinned as a local checkpoint, whose plan reads no store path: a
+      cached plan over the store would be dropped and rebuilt by the
+      CacheManager after every append to it. Counting the delta per table
+      materializes the pin; a table
+      not yet in the store needs no count, since every event gives it a
+      row, so a batch into an empty store runs no counting job.
+    - Only the tables whose delta is non-empty are appended, so an
+      unchanged table gains no file. The appends run concurrently,
+      ``min(11, defaultParallelism)`` at a time. Each thread inherits the
+      caller's local properties, so the jobs carry the streaming query's
+      job group and ``stop()`` cancels them. The sink returns once every
+      write has finished.
 
-    An empty batch (the watermark's no-data batch) is counted as one
-    batch with nothing delivered and writes no table. A failed batch is
-    counted once, with an error naming the epoch and each failed table,
-    when counters are attached, and re-raised otherwise.
+    A batch that its caller has cached and materialized (as
+    ``runner.run_pipeline`` does) is not counted again: its size is read
+    from the cache, and the sink works on a ``session.right_sized`` view of
+    it. A batch under one advisory partition is then a single partition, so
+    the dedup and the anti-join plan no exchange and each appended table
+    gains one file.
+
+    An empty batch is counted as one batch with nothing delivered and
+    writes no table. A failed batch is counted once, with an error naming
+    the epoch and each failed table, when counters are attached, and
+    re-raised otherwise.
     """
-
-    def _upsert(df: DataFrame, path: str, key_cols: list[str]) -> None:
-        if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
-            key_schema = StructType([df.schema[c] for c in key_cols])
-            existing = df.sparkSession.read.schema(key_schema).parquet(path)
-            df = df.join(existing, on=key_cols, how="left_anti")
-        df.write.mode("append").parquet(path)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         try:
-            n_in = batch_df.count()
+            n_in = cached_rows(batch_df)
+            if n_in is None:
+                n_in = batch_df.count()
             if n_in == 0:
                 if counters:
                     counters.record(delivered=0)
                 return
-            nodes, edges = build_graph(batch_df)
-            tables = {f"nodes/{name}": (df, NODE_KEYS[name]) for name, df in nodes.items()}
-            tables.update({f"edges/{name}": (df, df.columns) for name, df in edges.items()})
-            upsert = inheritable_thread_target(spark)(_upsert)
-            width = min(len(tables), spark.sparkContext.defaultParallelism)
-            with ThreadPoolExecutor(max_workers=width) as pool:
-                writes = {
-                    table: pool.submit(upsert, df, os.path.join(out_dir, table), keys)
-                    for table, (df, keys) in tables.items()
-                }
+            view = right_sized(batch_df)
+            types = {f.name: f.dataType for f in view.schema}
+            rows = graph.graph_rows(view)
+            stored = []
+            for table, (cols, n) in graph.GRAPH_TABLES.items():
+                path = os.path.join(out_dir, table)
+                if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
+                    key_schema = StructType(
+                        [StructField(name, types[ev]) for name, ev in cols[:n]]
+                    )
+                    stored.append(graph.table_keys(spark.read.schema(key_schema).parquet(path), table))
+            if stored:
+                keys = reduce(DataFrame.unionByName, stored)
+                rows = rows.join(keys, on=["table", *graph.KEY_SLOTS], how="left_anti")
+            # A local checkpoint, not a cache: its plan reads no store path,
+            # so an append does not make the CacheManager drop and rebuild it.
+            delta = rows.localCheckpoint(eager=False)
+            try:
+                tables = list(graph.GRAPH_TABLES)
+                if stored:
+                    grown = {r["table"] for r in delta.groupBy("table").count().collect()}
+                    tables = [t for t in tables if t in grown]
+                append = inheritable_thread_target(spark)(
+                    lambda t: graph.table_rows(delta, t)
+                    .write.mode("append")
+                    .parquet(os.path.join(out_dir, t))
+                )
+                width = max(1, min(len(tables), spark.sparkContext.defaultParallelism))
+                with ThreadPoolExecutor(max_workers=width) as pool:
+                    writes = {t: pool.submit(append, t) for t in tables}
+            finally:
+                delta._jdf.queryExecution().analyzed().rdd().unpersist(True)
             failed = {t: exc for t, w in writes.items() if (exc := w.exception())}
             if failed:
                 raise RuntimeError(

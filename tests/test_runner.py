@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from cloudtrace_exporter_spark import runner
@@ -83,8 +84,9 @@ def _graph_rows(tables):
 def test_stream_ticks_upsert_store_once_per_event(spark, tmp_path):
     """Two ingest ticks on one checkpoint, the second re-delivering the
     first window's tail: the store equals the batch graph of the distinct
-    events, each sink delivers every trace once, no-data epochs write no
-    Cypher rows, and no pinned batch is left cached."""
+    events, each sink delivers every trace once in one batch a tick, a
+    table gains a file only when it gains rows, and no pinned batch is
+    left cached."""
     from cloudtrace_exporter_spark.operators.graph import build_graph
 
     traces = normalize.events_as_traces(load_table(spark, SF, "events"))
@@ -108,7 +110,13 @@ def test_stream_ticks_upsert_store_once_per_event(spark, tmp_path):
         return sum(map(pred, os.listdir(path))) if os.path.isdir(path) else 0
 
     def store_files():
-        return {t: n_files(f"graph/{t}", lambda f: f.endswith(".parquet")) for t in tables}
+        """Per table, the row count of each parquet file, from the footers."""
+        out_files = {}
+        for t in tables:
+            path = f"{out}/graph/{t}"
+            names = [f for f in os.listdir(path) if f.endswith(".parquet")] if os.path.isdir(path) else []
+            out_files[t] = [pq.ParquetFile(os.path.join(path, f)).metadata.num_rows for f in names]
+        return out_files
 
     delivered = []
     for k, window in windows.items():
@@ -124,12 +132,15 @@ def test_stream_ticks_upsert_store_once_per_event(spark, tmp_path):
         )
         delivered.append({name: c.delivered for name, c in counters.items()})
         assert counters["graph"].failed == counters["cypher"].failed == 0
-        assert counters["cypher"].batches > 1  # the watermark's no-data batch ran
-        # a data epoch (one Cypher rows-<epoch> directory each) adds at most
-        # one parquet file to each of the 11 tables
-        data_epochs = n_files("cypher", lambda f: f.startswith("rows-")) - epochs_before
-        for table, n in store_files().items():
-            assert n - files_before[table] <= data_epochs, table
+        # one micro-batch a tick: no watermark-only batch follows it
+        assert counters["graph"].batches == counters["cypher"].batches == 1
+        assert n_files("cypher", lambda f: f.startswith("rows-")) - epochs_before == 1
+        # a table gains a file exactly when its delta is non-empty, and no
+        # 0-row parquet file is ever written
+        for table, rows in store_files().items():
+            grew = sum(rows) > sum(files_before[table])
+            assert len(rows) - len(files_before[table]) == int(grew), table
+            assert 0 not in rows, table
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
     events = runner.build_events(spark, EngineConfig(streams=False), CTX, landing)
@@ -231,3 +242,87 @@ def test_lifecycle_end_to_end_with_restart(spark, pages_dir, tmp_path):
     assert man3["layout"]["skipped"] is False
     assert man3["layout"]["rows"] == man["layout"]["rows"]
     assert all(s["skipped"] for k, s in man3.items() if k != "layout")
+
+
+def _land(traces, landing, tag):
+    """Write ``traces`` as CTS pages and move them into ``landing``."""
+    staged = f"{landing}-{tag}"
+    cts_pages.write_trace_pages(traces, staged)
+    os.makedirs(landing, exist_ok=True)
+    for f in os.listdir(staged):
+        if f.endswith(".json"):
+            os.rename(os.path.join(staged, f), os.path.join(landing, f"{tag}-{f}"))
+
+
+def test_redelivery_across_lagged_watermark_is_never_delivered(spark, tmp_path):
+    """Three ticks on one checkpoint with a one-minute watermark; tick 3
+    re-delivers tick 1's traces next to fresh ones. Each tick is one batch,
+    so tick 3 runs under the watermark that tick 2's batch left, which has
+    passed every trace of tick 1: whether its key was evicted or is still
+    in the dedup state, a re-delivered trace reaches neither sink."""
+    traces = normalize.events_as_traces(load_table(spark, SF, "events"))
+    ids = [r["trace_id"] for r in traces.orderBy("time", "trace_id").collect()]
+    windows = {1: ids[:300], 2: ids[300:700], 3: ids[:300] + ids[700:]}
+    landing = str(tmp_path / "pages")
+    cfg = EngineConfig(streams=True, forward=True, from_minutes=1)
+    out = str(tmp_path / "out")
+    delivered = []
+    for k, window in windows.items():
+        _land(traces.filter(traces.trace_id.isin(window)), landing, f"w{k}")
+        _, counters = runner.run_pipeline(
+            spark, cfg, CTX, landing, graph_dir=out, checkpoint=str(tmp_path / "ckpt")
+        )
+        for c in counters.values():
+            assert (c.failed, c.batches) == (0, 1)
+        delivered.append({name: c.delivered for name, c in counters.items()})
+    assert delivered == [{"graph": n, "cypher": n} for n in (300, 400, 300)]
+    actions = pq.read_table(f"{out}/graph/nodes/actions", columns=["id"]).column("id").to_pylist()
+    assert len(actions) == len(set(actions)) == 1000
+    cypher = spark.read.json(f"{out}/cypher/rows-*")
+    assert cypher.count() == cypher.select("actionId").distinct().count() == 1000
+
+
+def test_data_tick_runs_at_most_13_jobs_in_the_query_job_group(spark, pages_dir, tmp_path):
+    """One data tick into an empty store: the stateful batch, the 11 table
+    appends and the Cypher write, all in the streaming query's job group.
+    A write that lost the group (the Cypher thread, a table thread) would
+    show up as an ungrouped job."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        cfg = EngineConfig(streams=True, forward=True)
+        events = runner.build_events(spark, cfg, CTX, pages_dir)  # plans the source outside the tick
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        _, counters = runner.run_pipeline(
+            spark, cfg, CTX, pages_dir,
+            graph_dir=str(tmp_path / "out"), checkpoint=str(tmp_path / "ckpt"),
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert events.isStreaming
+    assert [(c.delivered, c.failed, c.batches) for c in counters.values()] == [(1000, 0, 1)] * 2
+    assert len(listener.ids) == 1
+    jobs = tracker.getJobIdsForGroup(listener.ids[0])
+    assert 12 <= len(jobs) <= 13  # the 11 appends and the Cypher write, plus the batch
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped  # no new ungrouped job

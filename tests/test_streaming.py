@@ -328,6 +328,61 @@ def test_graph_sink_failed_table_is_counted_once_or_raised(spark, tmp_path):
         foreach_batch_graph_upsert(str(out_dir))(batch, 4)
 
 
+def test_graph_sink_merge_equals_per_table_upsert(spark, tmp_path):
+    """The single anti-join writes, to each of the 11 tables, exactly what
+    ``build_graph`` anti-joined per table against the store would: the
+    same column names and types and the same rows. The second batch holds
+    an exact duplicate event, shared dimension keys, null subject and
+    resource keys, and keys the first batch already stored; a null key
+    never matches, so it is appended again."""
+    import datetime as dt
+    from collections import Counter
+
+    from cloudtrace_exporter_spark.operators.graph import GRAPH_TABLES, build_graph
+    from cloudtrace_exporter_spark.schemas import EVENT_SCHEMA, NODE_KEYS
+
+    def ev(eid, subject, resource, status="ok", region="eu-de", tenant="p1"):
+        return (eid, "src", "t", subject, dt.datetime(2024, 1, 1, 12, int(eid[1:])),
+                status, "200", resource, region, "d1", tenant, "{}")
+
+    first = spark.createDataFrame(
+        [ev("e1", "alice", "r1"), ev("e2", None, "r2"), ev("e3", "bob", "r1", "warn")],
+        EVENT_SCHEMA,
+    )
+    second = spark.createDataFrame(
+        [ev("e4", "alice", "r3"), ev("e4", "alice", "r3"), ev("e5", None, None, region="eu-nl"),
+         ev("e1", "alice", "r1"), ev("e6", "carol", "r1", tenant="p2"), ev("e7", "bob", None)],
+        EVENT_SCHEMA,
+    )
+    out = tmp_path / "graph"
+
+    def parquet_files():
+        return {t: sorted(str(f) for f in (out / t).glob("*.parquet")) for t in GRAPH_TABLES}
+
+    counters = DeliveryCounters()
+    sink = foreach_batch_graph_upsert(str(out), counters)
+    sink(first, 0)
+    before = parquet_files()
+    sink(second, 1)
+    assert (counters.delivered, counters.failed) == (9, 0)
+    nodes, edges = build_graph(second)
+    built = {**{f"nodes/{n}": df for n, df in nodes.items()},
+             **{f"edges/{n}": df for n, df in edges.items()}}
+    for table, files in parquet_files().items():
+        kind, name = table.split("/")
+        keys = NODE_KEYS[name] if kind == "nodes" else built[table].columns
+        expected = built[table].join(spark.read.parquet(*before[table]), keys, "left_anti")
+        added = [f for f in files if f not in before[table]]
+        if not added:
+            assert expected.count() == 0, table
+            continue
+        written = spark.read.parquet(*added)
+        assert written.dtypes == expected.dtypes, table
+        assert Counter(written.collect()) == Counter(expected.collect()), table
+    assert [f for f in parquet_files()["nodes/regions"] if f not in before["nodes/regions"]]
+    assert not [f for f in parquet_files()["nodes/statuses"] if f not in before["nodes/statuses"]]
+
+
 def test_graph_sink_jobs_inherit_caller_job_group(spark, tmp_path):
     """The table writes run on pool threads, yet every job carries the
     calling thread's job group, which is what lets a streaming query's
