@@ -231,20 +231,19 @@ def cache_once(df: DataFrame) -> DataFrame:
     return df if _cached_entry(df) is not None else df.cache()
 
 
-def cached_rows(df: DataFrame) -> int | None:
-    """Row count of a cached ``df`` whose every partition is materialized,
-    read from the cache builder's row counter with no job; None when ``df``
-    is not cached or not yet fully materialized."""
+def row_count(df: DataFrame) -> int:
+    """Row count of ``df``. For a cached ``df`` whose every partition is
+    materialized it is read from the cache builder's row counter, with no
+    job; otherwise ``df`` is counted."""
     entry = _cached_entry(df)
-    if entry is None:
-        return None
-    try:
-        builder = entry.cachedRepresentation().cacheBuilder()
-        if not builder.isCachedColumnBuffersLoaded():
-            return None
-        return int(builder.rowCountStats().value())
-    except Exception:
-        return None
+    if entry is not None:
+        try:
+            builder = entry.cachedRepresentation().cacheBuilder()
+            if builder.isCachedColumnBuffersLoaded():
+                return int(builder.rowCountStats().value())
+        except Exception:
+            pass
+    return df.count()
 
 
 def right_sized(df: DataFrame) -> DataFrame:

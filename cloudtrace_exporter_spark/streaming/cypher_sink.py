@@ -37,7 +37,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloudtrace_exporter_spark.session import cached_rows, right_sized
+from cloudtrace_exporter_spark.session import right_sized, row_count
 from cloudtrace_exporter_spark.streaming.sinks import DeliveryCounters
 
 # Set-oriented re-expression of the reference's per-event MERGE template
@@ -153,9 +153,7 @@ def foreach_batch_cypher_upsert(
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         try:
-            n = cached_rows(batch_df)
-            if n is None:
-                n = batch_df.count()
+            n = row_count(batch_df)
             if n == 0:
                 if counters:
                     counters.record(delivered=0)

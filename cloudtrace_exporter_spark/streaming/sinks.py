@@ -27,7 +27,7 @@ from pyspark.sql.types import StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from cloudtrace_exporter_spark.operators import graph
-from cloudtrace_exporter_spark.session import cached_rows, right_sized
+from cloudtrace_exporter_spark.session import right_sized, row_count
 
 
 @dataclass
@@ -102,9 +102,7 @@ def foreach_batch_graph_upsert(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         try:
-            n_in = cached_rows(batch_df)
-            if n_in is None:
-                n_in = batch_df.count()
+            n_in = row_count(batch_df)
             if n_in == 0:
                 if counters:
                     counters.record(delivered=0)
